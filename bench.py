@@ -540,19 +540,20 @@ def main() -> None:
     # Belt-and-braces durability (r14, VERDICT r13 task 8): r12's
     # round-over-round PERF diff was lost because the driver's capture of
     # this stdout line failed to parse. ALSO write the identical JSON to
-    # a committed self-artifact so the next diff never depends on
-    # transcript capture. stdout contract unchanged; failures to write
-    # (read-only checkout, etc.) must never fail the bench itself.
+    # a gitignored self-artifact (never a committed file, which each run
+    # would overwrite) so the next diff never depends on transcript
+    # capture. stdout contract unchanged; failures to write (read-only
+    # checkout, etc.) must never fail the bench itself.
+    self_path = os.environ.get(
+        "SPARK_GRAFT_BENCH_SELF",
+        str(Path(__file__).resolve().parent / "BENCH_SELF_latest.json"),
+    )
     try:
-        self_path = os.environ.get(
-            "SPARK_GRAFT_BENCH_SELF",
-            str(Path(__file__).resolve().parent / "BENCH_SELF_r14.json"),
-        )
         with open(self_path, "w") as fh:
             json.dump(out, fh, indent=1)
             fh.write("\n")
-    except Exception:
-        pass
+    except Exception as exc:
+        print(f"bench: self-artifact {self_path} not written: {exc!r}", file=sys.stderr)
     # Exit rc=0 deliberately: PySpark 4's JVM teardown intermittently
     # aborts ("terminate called without an active exception", rc=134)
     # AFTER all work is done and the JSON line is out. Stop Spark, then

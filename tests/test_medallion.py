@@ -71,3 +71,122 @@ def test_silver_quality_observed(spark, fixture_dir, tmp_path):
     assert q["rows"] == p.silver().count() > 0
     assert 0 <= q["null_slug"] <= q["rows"]
     assert 0 <= q["null_request_dt"] <= q["rows"]
+
+
+# ------------------------------------------------- serving generations ---
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted in a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _built(spark, fixture_dir, root):
+    pipe = MedallionPipeline(spark, root, today=TODAY)
+    pipe.init_bronze(spark.read.parquet(f"{fixture_dir}/entries.parquet"))
+    pipe.rebuild()
+    return pipe
+
+
+def test_same_generation_is_one_object_and_no_jobs(spark, fixture_dir, tmp_path):
+    pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
+    for open_ in (pipe.silver, lambda: pipe.gold("agency_stats")):
+        first = open_()
+        again, jobs = _jobs(spark, open_)
+        assert again is first
+        assert jobs == 0
+
+
+def test_sync_swaps_in_the_new_generation(spark, fixture_dir, tmp_path):
+    pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
+    old_silver, old_home = pipe.silver(), pipe.gold("home_stats")
+    n0 = old_silver.count()
+    source = pd.read_parquet(f"{fixture_dir}/sync_source.parquet")
+    assert pipe.sync(sync.mock_fetcher(source), window=64).added == 5
+
+    assert pipe.silver() is not old_silver
+    assert pipe.silver().count() == n0 + 5
+    assert pipe.gold("home_stats").first()["total_requests"] == n0 + 5
+    # the pipeline holds one generation: the previous one is released
+    for old in (old_silver, old_home):
+        assert not old.storageLevel.useMemory and not old.storageLevel.useDisk
+
+
+def test_foreign_rebuild_is_seen_by_the_next_open(spark, fixture_dir, tmp_path):
+    root = str(tmp_path / "lake")
+    first = _built(spark, fixture_dir, root)
+    old = first.silver()
+    n0 = old.count()
+
+    other = MedallionPipeline(spark, root, today=TODAY)
+    other.init_bronze(
+        spark.read.parquet(f"{fixture_dir}/entries.parquet").where(F.col("id") % 2 == 0)
+    )
+    other.rebuild()
+
+    now = first.silver()
+    assert now is not old
+    assert now.count() == other.silver().count() < n0
+    assert not old.storageLevel.useMemory and not old.storageLevel.useDisk
+
+
+def test_concurrent_first_opens_load_once(spark, fixture_dir, tmp_path):
+    """More threads than cores race the first open of one generation;
+    a check-then-load without the lock would persist it more than once."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from wvfoia_sync_spark.foia import silver as silver_mod
+
+    root = tmp_path / "lake"
+    entries = spark.read.parquet(f"{fixture_dir}/entries.parquet")
+    silver_mod.write_silver(silver_mod.to_silver(entries), str(root / "silver"))
+    pipe = MedallionPipeline(spark, str(root), today=TODAY)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+
+    threads = 8
+    start = threading.Barrier(threads)
+
+    def open_silver(_):
+        start.wait(timeout=60)
+        return pipe.silver()
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            got = list(pool.map(open_silver, range(threads), timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(got) == threads and all(df is got[0] for df in got)
+    assert len(set(persisted().keys()) - before) == 1
+
+
+def test_page_queries_run_two_jobs_over_resident_input(spark, fixture_dir, tmp_path):
+    """Count plus the lazy page: the count is the only work inside the
+    call (a shuffle-map job and a result job); the page runs when read."""
+    from wvfoia_sync_spark.foia import agencies, queries
+    from wvfoia_sync_spark.foia.schema import EntrySearchOptions
+
+    pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
+    silver, stats = pipe.silver(), pipe.gold("agency_stats")
+    page, jobs = _jobs(
+        spark, lambda: queries.list_entries(silver, EntrySearchOptions(resolution=("Granted",)))
+    )
+    assert jobs == 2
+    assert 0 < len(page.rows.collect()) <= page.total
+    page, jobs = _jobs(spark, lambda: agencies.agencies_page(stats, term="department"))
+    assert jobs == 2
+    assert 0 < len(page.rows.collect()) <= page.total

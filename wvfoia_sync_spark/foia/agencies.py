@@ -105,15 +105,9 @@ def agencies_page(
     # sort value is URL input, a KeyError here would 500 the whole page
     sorter = AGENCY_SORTERS.get(sort, AGENCY_SORTERS["most_requests"])
     order = sorter() + [F.col("agency_slug").asc()]
-    df = df.cache()
-    try:
-        total = df.count()
-        page, total_pages = relational.clamp_page(total, cursor.page, cursor.page_size)
-        rows = relational.paginate(df, order, page, cursor.page_size).localCheckpoint(
-            eager=True
-        )
-    finally:
-        df.unpersist()
+    total = df.count()
+    page, total_pages = relational.clamp_page(total, cursor.page, cursor.page_size)
+    rows = relational.paginate(df, order, page, cursor.page_size)
     return Page(rows=rows, total=total, total_pages=total_pages, page=page)
 
 

@@ -3,8 +3,9 @@
 ``list_entries`` is the app's core query (§3.1): bindWhere predicates
 F1-F5 AND-combined, one of five sorts (O1), count + clamped page (O2).
 The filtered DataFrame is built once and shared by the count and the page
-fetch — the reference issues two SQL round trips for this
-(entries.ts:102-116); Spark caches the filtered plan instead.
+fetch; like the reference's two SQL round trips (entries.ts:102-116),
+that is two Spark jobs over silver, which the serving pipeline keeps
+persisted per sync (plans.medallion). Nothing is cached per request.
 """
 
 from __future__ import annotations
@@ -109,19 +110,9 @@ def list_entries(
     """§3.1 end-to-end: filter -> count -> clamp -> page (entries.ts:87-139)."""
     pred = bind_where(opts, aliases_map)
     filtered = silver.where(pred) if pred is not None else silver
-    filtered = filtered.cache()  # shared by count + page fetch (SURVEY §4)
-    try:
-        total = filtered.count()
-        page, total_pages = relational.clamp_page(total, cursor.page, cursor.page_size)
-        # materialize the page (<= page_size rows) so the cache can be
-        # released NOW — a serving process calling this per request would
-        # otherwise accumulate one never-unpersisted cache entry per
-        # distinct filter combination for the session lifetime
-        rows = relational.paginate(
-            filtered, order_by(opts.sort), page, cursor.page_size
-        ).localCheckpoint(eager=True)
-    finally:
-        filtered.unpersist()
+    total = filtered.count()
+    page, total_pages = relational.clamp_page(total, cursor.page, cursor.page_size)
+    rows = relational.paginate(filtered, order_by(opts.sort), page, cursor.page_size)
     return Page(rows=rows, total=total, total_pages=total_pages, page=page)
 
 

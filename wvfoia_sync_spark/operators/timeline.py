@@ -9,7 +9,8 @@ Scale notes: the spine is generated with ``sequence() + explode`` from a
 single row — O(days) rows, trivially broadcastable, so the gap-fill join
 is a broadcast join against the aggregated (small) side, never a shuffle
 of the fact table. The fact-side aggregation is a single partial+final
-hash aggregate on (day, bucket).
+hash aggregate on day, one conditional count per bucket (one shuffle;
+``pivot`` would aggregate on (day, bucket) first and shuffle twice).
 """
 
 from __future__ import annotations
@@ -40,14 +41,13 @@ def daily_pivot_timeline(
     spine: DataFrame,
 ) -> DataFrame:
     """Per-day counts pivoted into one column per bucket, zero-filled over
-    the spine. Fixed ``buckets`` list avoids the extra distinct-scan Spark
-    needs for open pivots and pins the output schema."""
+    the spine. One conditional count per bucket of the fixed ``buckets``
+    list: one aggregation, one shuffle, and a pinned output schema."""
     agg = (
         df.select(date_col.cast("date").alias("date"), bucket_col.alias("bucket"))
         .where(F.col("date").isNotNull())
         .groupBy("date")
-        .pivot("bucket", list(buckets))
-        .count()
+        .agg(*[F.count(F.when(F.col("bucket") == b, 1)).alias(b) for b in buckets])
     )
     out = spine.join(F.broadcast(agg), "date", "left")
     return out.select(

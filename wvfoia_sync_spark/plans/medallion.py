@@ -17,6 +17,25 @@ result, so recomputing gold after each sync is semantically identical
 and removes cache-staleness reasoning entirely. ``meta.json`` carries
 ``last_updated_at`` (ST4) and the export watermark (ST5).
 
+Serving reads silver and gold through one persisted DataFrame per
+*generation*: one on-disk state of a table directory, keyed by the
+directory's ``(st_ino, st_mtime_ns)``. Both ways a table is replaced
+change that key: a rename swap puts another directory (inode) at the
+path, and a Spark overwrite deletes and recreates the directory, which
+moves its mtime even when the filesystem reuses the inode. (A writer
+that only adds files inside an existing partition directory does not
+change it.) So each ``silver()`` or ``gold(name)`` call costs one
+``os.stat`` and returns the same object until a writer (this pipeline,
+another one on the same root, or any other process) replaces the table;
+the next call then unpersists the old generation and loads the new one,
+so a pipeline holds one generation per table. This is the reference's
+cache-until-sync policy (sync.ts:202, ST3) applied to the inputs rather
+than to each query result. Caveat: a request that already holds the
+previous generation's DataFrame when it is replaced fails exactly as it
+would without the cache, because the files it planned over are gone.
+``bronze()`` stays a plain read: only ``sync()`` and ``rebuild()`` scan
+it, once each.
+
 Scale notes: each gold table is one narrow aggregate over silver; at
 100 TB you would (a) partition silver by request_year and z-order/sort by
 (agency_slug, id) for pruning, (b) rebuild gold incrementally from the
@@ -29,6 +48,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,6 +67,9 @@ class MedallionPipeline:
         self.root = root
         self.today = today or dt.date.today().isoformat()
         self.last_silver_quality: dict = {}
+        # table dir relative to root -> (generation, persisted DataFrame)
+        self._resident: dict[str, tuple[tuple[int, int], DataFrame]] = {}
+        self._load_lock = threading.Lock()
 
     # ---------------------------------------------------------- paths ---
     def _p(self, *parts: str) -> str:
@@ -56,10 +79,46 @@ class MedallionPipeline:
         return self.spark.read.parquet(self._p("bronze"))
 
     def silver(self) -> DataFrame:
-        return self.spark.read.parquet(self._p("silver"))
+        return self._resident_read("silver")
 
     def gold(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._p("gold", name))
+        return self._resident_read(os.path.join("gold", name))
+
+    def _resident_read(self, rel: str) -> DataFrame:
+        """The persisted DataFrame of ``rel``'s current generation; the
+        first call of a generation loads it, once across threads."""
+        path = self._p(rel)
+        st = os.stat(path)
+        gen = (st.st_ino, st.st_mtime_ns)
+        held = self._resident.get(rel)
+        if held is not None and held[0] == gen:
+            return held[1]
+        with self._load_lock:
+            held = self._resident.get(rel)
+            if held is not None and held[0] == gen:
+                return held[1]
+            if held is not None:
+                held[1].unpersist()
+            # Spark's cache manager matches plain reads of one path to one
+            # entry, so an old DataFrame would silently serve the new
+            # generation's cache; the option keeps each generation distinct
+            df = (
+                self.spark.read.option("medallion.generation", f"{gen[0]}.{gen[1]}")
+                .parquet(path)
+                .persist()
+            )
+            df.count()
+            self._resident[rel] = (gen, df)
+            return df
+
+    def _drop_resident(self) -> None:
+        """Unpersist every held generation. Must run before this pipeline
+        overwrites silver or gold: Spark's write path re-caches any cached
+        plan that reads the written path."""
+        with self._load_lock:
+            for _, df in self._resident.values():
+                df.unpersist()
+            self._resident.clear()
 
     # ----------------------------------------------------------- build ---
     def init_bronze(self, entries: DataFrame) -> None:
@@ -127,6 +186,7 @@ class MedallionPipeline:
         from pyspark.sql import Observation
         import pyspark.sql.functions as F
 
+        self._drop_resident()
         sdf = silver_mod.to_silver(self.bronze(), corrections, aliases, renames)
         # data-quality counters ride along with the silver write (observe
         # attaches accumulators to the SAME job — no second scan)
@@ -139,7 +199,7 @@ class MedallionPipeline:
         )
         silver_mod.write_silver(sdf, self._p("silver"))
         self.last_silver_quality = dict(obs.get)
-        sdf = self.silver()
+        sdf = self.silver()  # the new generation: five golds, one scan
         golds: dict[str, DataFrame] = {
             "agency_stats": agencies_mod.agency_stats(sdf, self.today),
             "resolution_timeline": agencies_mod.resolution_timeline(

@@ -32,15 +32,7 @@ def _pagerank_step(nodes, edges_norm, ranks, damping=0.85, base=0.15):
     produced (same class as the r5 partition_pruned_revenue ulp
     finding). Values are all positive, so floor(x+0.5) is exactly
     round-half-up in both engines."""
-    # NO broadcast hints inside the iteration (r14): every frame here is
-    # node-cardinality (<= |nations|^2 rows), but each F.broadcast()
-    # forces a SEPARATE broadcast-construction job per iteration — six
-    # sequential driver round-trips across the unrolled loop, ~1 s of
-    # the query's wall on 625-row data. Plain joins keep the whole
-    # 3-iteration chain inside ONE job of tiny AQE-coalesced exchanges
-    # (interleaved A/B min-of-4: 3.03 -> 2.32 s probe walls, outputs
-    # asserted identical — the quantized BIGINT arithmetic is
-    # order-independent, so join strategy cannot change results).
+    # No broadcast hints: AQE broadcasts these node-sized frames anyway (identical plan).
     contrib = (
         edges_norm.join(ranks, edges_norm.src == ranks.node)
         .select(
