@@ -340,6 +340,60 @@ def test_timeline_agency_scoped_all_time(silver_df, silver_duck):
     assert int(pdf[["granted", "granted_in_part", "exempted", "rejected", "other"]].to_numpy().sum()) == n
 
 
+BUCKETS = ["granted", "granted_in_part", "exempted", "rejected", "other"]
+
+
+def test_timeline_empty_selection(silver_df):
+    """No matching rows: all-time has no range (0 rows); a fixed window
+    still lists every day, with zero counts."""
+    none = agencies.resolution_timeline(silver_df, "no-such-agency", TODAY, days=None)
+    assert none.count() == 0
+    rows = agencies.resolution_timeline(silver_df, "no-such-agency", TODAY, days=30).collect()
+    assert len(rows) == 30
+    assert str(max(r["date"] for r in rows)) == TODAY
+    assert all(r[b] == 0 for r in rows for b in BUCKETS)
+
+
+def test_timeline_gap_days_match_duckdb_spine_join(silver_df, silver_duck):
+    """All-time timeline of one agency, row for row against a DuckDB
+    generate_series spine LEFT JOIN the per-day bucket counts."""
+    slug = "department-of-environmental-protection"
+    got = [
+        (str(r["date"]), *(r[b] for b in BUCKETS))
+        for r in agencies.resolution_timeline(silver_df, slug, TODAY, days=None)
+        .orderBy("date")
+        .collect()
+    ]
+    oracle = silver_duck.execute(
+        f"""
+        WITH sel AS (
+          SELECT completion_dt AS d,
+                 CASE lower(trim(resolution))
+                   WHEN 'granted' THEN 'granted'
+                   WHEN 'granted in part' THEN 'granted_in_part'
+                   WHEN 'exempted' THEN 'exempted'
+                   WHEN 'rejected' THEN 'rejected'
+                   ELSE 'other' END AS b
+          FROM silver
+          WHERE agency_slug = '{slug}' AND completion_dt IS NOT NULL
+            AND completion_dt <= DATE '{TODAY}'
+        ), spine AS (
+          SELECT CAST(unnest(generate_series(min(d), DATE '{TODAY}', INTERVAL 1 DAY)) AS DATE) AS d
+          FROM sel
+        ), agg AS (
+          SELECT d, {", ".join(f"count(*) FILTER (WHERE b = '{b}') AS {b}" for b in BUCKETS)}
+          FROM sel GROUP BY d
+        )
+        SELECT strftime(s.d, '%Y-%m-%d'),
+               {", ".join(f"CAST(coalesce(a.{b}, 0) AS BIGINT)" for b in BUCKETS)}
+        FROM spine s LEFT JOIN agg a ON s.d = a.d ORDER BY s.d
+        """
+    ).fetchall()
+    assert got == [tuple(r) for r in oracle]
+    # the slug really has gap days, so the zero fill is exercised
+    assert any(sum(r[1:]) == 0 for r in got)
+
+
 def test_fts_diacritic_fold(silver_df):
     """FTS5 unicode61 remove_diacritics parity: 'cafe' finds 'café'."""
     with_accent = queries.list_entries(silver_df, EntrySearchOptions(search="café"))

@@ -101,6 +101,44 @@ def test_queries_run_with_non_repo_cwd():
     assert "OK" in proc.stdout
 
 
+def test_configure_session_names_each_tolerated_failure(capsys):
+    """configure_session tolerates a session that refuses parts of its
+    set-up, but each refusal leaves one stderr line naming what failed."""
+    from types import SimpleNamespace
+
+    from wvfoia_sync_spark import session
+
+    def refuse(k, v):
+        raise RuntimeError(f"cannot set {k}\n\tat some.jvm.Frame")
+
+    shipped = []
+    # a context without _python_includes: the package is shipped anyway
+    sc = SimpleNamespace(master="local[1]", addPyFile=shipped.append)
+    spark = SimpleNamespace(conf=SimpleNamespace(set=refuse), sparkContext=sc)
+    assert session.configure_session(spark) is spark
+    lines = capsys.readouterr().err.splitlines()
+    n = len(session._RUNTIME_CONFS)
+    assert len(shipped) == 1
+    assert len(lines) == n + 2
+    assert all(ln.startswith("wvfoia_sync_spark.session: ignored ") for ln in lines)
+    assert all(k in ln for k, ln in zip(session._RUNTIME_CONFS, lines))
+    assert "_python_includes" in lines[n]
+    assert "maxPartitionBytes" in lines[n + 1]
+
+    class NoContext:
+        conf = SimpleNamespace(set=lambda k, v: None)
+
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no SparkContext")
+
+    session.configure_session(NoContext())
+    lines = capsys.readouterr().err.splitlines()
+    assert len(lines) == 2
+    assert "shipping the package" in lines[0]
+    assert "maxPartitionBytes" in lines[1]
+
+
 def test_driver_window_fully_resolvable():
     """Every DRIVER_WINDOW name must resolve to a registered query (the
     runtime path silently skips unknowns so a rename can't zero the

@@ -1,6 +1,8 @@
 """End-to-end medallion pipeline test: init bronze -> sync wave -> silver
 + gold rebuild -> metadata stamp (ST1-ST4 semantics together)."""
 
+import os
+
 import pandas as pd
 import pyspark.sql.functions as F
 
@@ -174,9 +176,10 @@ def test_concurrent_first_opens_load_once(spark, fixture_dir, tmp_path):
     assert len(set(persisted().keys()) - before) == 1
 
 
-def test_page_queries_run_two_jobs_over_resident_input(spark, fixture_dir, tmp_path):
+def test_page_queries_run_one_job_over_resident_input(spark, fixture_dir, tmp_path):
     """Count plus the lazy page: the count is the only work inside the
-    call (a shuffle-map job and a result job); the page runs when read."""
+    call, one job over a one-partition generation (no shuffle-map job);
+    the page runs when read."""
     from wvfoia_sync_spark.foia import agencies, queries
     from wvfoia_sync_spark.foia.schema import EntrySearchOptions
 
@@ -185,8 +188,76 @@ def test_page_queries_run_two_jobs_over_resident_input(spark, fixture_dir, tmp_p
     page, jobs = _jobs(
         spark, lambda: queries.list_entries(silver, EntrySearchOptions(resolution=("Granted",)))
     )
-    assert jobs == 2
+    assert jobs == 1
     assert 0 < len(page.rows.collect()) <= page.total
     page, jobs = _jobs(spark, lambda: agencies.agencies_page(stats, term="department"))
-    assert jobs == 2
+    assert jobs == 1
     assert 0 < len(page.rows.collect()) <= page.total
+
+
+SLUG = "department-of-environmental-protection"
+
+
+def test_timeline_runs_one_exchange_free_job_over_resident_input(
+    spark, fixture_dir, tmp_path
+):
+    """A generation that fits one scan split is held in one partition,
+    so the agency route's timeline + totals needs no Exchange: the
+    per-day aggregate, the fold into the date map and the totals all
+    run in one job."""
+    from wvfoia_sync_spark.foia import agencies
+
+    pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
+    silver = pipe.silver()
+    assert silver.rdd.getNumPartitions() == 1
+    totals = agencies.timeline_window_totals(
+        agencies.resolution_timeline(silver, SLUG, TODAY, days=365)
+    )
+    rows, jobs = _jobs(spark, totals.collect)
+    assert jobs == 1
+    assert rows[0]["total"] > 0
+    plan = totals._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan  # covers BroadcastExchange too
+
+
+def _serving_results(silver):
+    from wvfoia_sync_spark.foia import agencies, queries
+    from wvfoia_sync_spark.foia.schema import EntrySearchOptions
+
+    pages = []
+    for opts in (
+        EntrySearchOptions(),
+        EntrySearchOptions(resolution=("Granted",)),
+        EntrySearchOptions(agency=SLUG, sort="highest_fee"),
+    ):
+        page = queries.list_entries(silver, opts)
+        pages.append((page.total, [r["id"] for r in page.rows.collect()]))
+    timelines = [
+        sorted(agencies.resolution_timeline(silver, slug, TODAY, days=days).collect())
+        for slug, days in ((SLUG, 365), (None, None))
+    ]
+    return pages, timelines
+
+
+def test_generation_larger_than_a_split_keeps_its_partitions(
+    spark, fixture_dir, tmp_path
+):
+    """Below ``spark.sql.files.maxPartitionBytes`` the generation is one
+    partition; above it the scan's own split is kept, with the same
+    serving results."""
+    from wvfoia_sync_spark.plans.medallion import _data_bytes
+
+    root = str(tmp_path / "lake")
+    pipe = _built(spark, fixture_dir, root)
+    assert pipe.silver().rdd.getNumPartitions() == 1
+    expected = _serving_results(pipe.silver())
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(_data_bytes(os.path.join(root, "silver")) // 2))
+    try:
+        split = MedallionPipeline(spark, root, today=TODAY).silver()
+        assert split.rdd.getNumPartitions() > 1
+        assert _serving_results(split) == expected
+    finally:
+        spark.conf.set(key, before)

@@ -370,6 +370,40 @@ def test_knn_join_scores_in_arrow_stage(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
+def test_knn_join_query_side_above_broadcast_threshold_takes_join_form(spark):
+    """The Arrow stage ships the collected query batch to every task, a
+    broadcast, so it only runs while the query side's estimated size is
+    within spark.sql.autoBroadcastJoinThreshold. Above it the join form
+    runs instead, with the same ranks; the size check itself runs no
+    Spark job (building the Arrow form runs exactly its one collect)."""
+    from tests.test_medallion import _jobs
+    from wvfoia_sync_spark.operators import similarity
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.where(F.col("vec_id") < 20)
+    cols = ["query_id", "rank", "vec_id"]
+
+    def build():
+        return similarity.knn_join_exact(emb, queries, k=3)
+
+    arrow, jobs = _jobs(spark, build)
+    assert jobs == 1
+    assert "MapInPandas" in plan(arrow)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1024")  # below the query side's estimate
+    try:
+        joined, jobs = _jobs(spark, build)
+        p = plan(joined)
+        ranks = sorted(joined.select(cols).collect())
+    finally:
+        spark.conf.set(key, before)
+    assert jobs == 0
+    assert "MapInPandas" not in p and "BroadcastNestedLoopJoin" in p
+    assert ranks == sorted(arrow.select(cols).collect())
+    assert len(ranks) == 20 * 3
+
+
 def test_no_pinned_broadcast_of_fact_scaled_tables(spark):
     """An explicit F.broadcast() hint PINS the strategy — AQE can never
     degrade it to a shuffled join, so a hint on a build side that grows

@@ -224,6 +224,36 @@ def test_hard_negatives_oracle_precondition_top_k_score_gaps(spark):
             )
 
 
+def test_knn_join_oracle_precondition_top_k_score_gaps():
+    """knn_join's Arrow stage sums the cosine in numpy order, not the JVM
+    fold's; the registry query's hash-match oracle stays exact only
+    while adjacent scores in each query's top-(k+1) list (k=3, query
+    batch vec_id < 20, self-match excluded) sit far above that noise.
+    Smallest gap measured: 3.5e-3 at sf0.001, 9.2e-3 at sf0.01, 4.5e-3
+    at sf0.1; asserted > 1e-8 like the other margin tests."""
+    import os
+
+    import numpy as np
+    import duckdb
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+        d = duckdb.sql(
+            f"SELECT vec_id, embedding FROM "
+            f"'{sf_dir}/embeddings.parquet' ORDER BY vec_id"
+        ).fetchnumpy()
+        X = np.stack([np.asarray(v, dtype=np.float64) for v in d["embedding"]])
+        X = X / np.linalg.norm(X, axis=1, keepdims=True)
+        ids = d["vec_id"]
+        for qi in np.nonzero(ids < 20)[0]:
+            top = np.sort(X[ids != ids[qi]] @ X[qi])[::-1][:4]
+            assert -np.diff(top).min() > 1e-8, (
+                f"{sf_dir} query {ids[qi]}: adjacent top-4 scores within "
+                "float noise — re-gate knn_join as a recall check before "
+                "regenerating fixtures"
+            )
+
+
 def test_hard_negatives_plan_broadcasts_queries_no_cartesian(spark):
     from tests.test_plan_quality import plan
 

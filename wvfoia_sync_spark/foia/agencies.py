@@ -118,36 +118,26 @@ def resolution_timeline(
     days: int | None = None,
 ) -> DataFrame:
     """A10/J5 agencyResolutionTimeline (agencies.ts:186-263): bucketed
-    completion-date pivot with dense zero-filled day spine.
+    completion-date pivot, zero-filled over every day of the range.
 
     ``days=None`` = all-time (start at MIN completion date, A11)."""
     df = silver
     if agency_slug is not None:
         df = df.where(F.col("agency_slug") == agency_slug)
-    df = df.where(
-        F.col("completion_dt").isNotNull()
-        & (F.col("completion_dt") <= F.lit(today).cast("date"))
-    )
+    hi = F.lit(today).cast("date")
+    df = df.where(F.col("completion_dt").isNotNull() & (F.col("completion_dt") <= hi))
     if days is not None:
-        start = F.lit(today).cast("date") - F.expr(f"interval {days - 1} day")
-        bounds = df.sparkSession.range(1).select(
-            start.cast("date").alias("lo"), F.lit(today).cast("date").alias("hi")
-        )
-        df = df.where(F.col("completion_dt") >= start.cast("date"))
+        lo = F.date_sub(hi, days - 1)
+        df = df.where(F.col("completion_dt") >= lo)
     else:
-        bounds = df.agg(
-            F.min("completion_dt").alias("lo"),
-            F.lit(today).cast("date").alias("hi"),
-        )
-    spine = bounds.where(F.col("lo").isNotNull()).select(
-        F.explode(F.sequence("lo", "hi")).alias("date")
-    )
+        lo = F.min("date")
     return daily_pivot_timeline(
         df,
         F.col("completion_dt"),
         resolution_bucket("resolution"),
         ["granted", "granted_in_part", "exempted", "rejected", "other"],
-        spine,
+        lo,
+        hi,
     )
 
 

@@ -621,31 +621,41 @@ def _knn_scores_arrow(
     vec_col: str,
     query_id_col: str,
 ) -> DataFrame | None:
-    """Arrow-batched scoring stage for the UNfiltered k-NN join (r14,
-    guide §4.2): the query batch is collected driver-side (small by
-    definition — the same fixture-input class as registry._query_vec)
-    and every corpus Arrow batch scores against it with ONE numpy
-    matmul, replacing the per-(corpus x query)-pair interpreted
-    zip_with/aggregate dot fold (higher-order functions evaluate
-    interpreted per ELEMENT — 80k pairs x 64 dims of interpreter
-    dispatch was the whole query's cost; measured 1.5 s -> 0.55 s at
-    sf0.1).
+    """Arrow-batched scoring stage for the UNfiltered k-NN join: the
+    query batch is collected driver-side and every corpus Arrow batch
+    scores against it with ONE numpy matmul, replacing the
+    per-(corpus x query)-pair interpreted zip_with/aggregate dot fold
+    (higher-order functions evaluate interpreted per ELEMENT — 80k
+    pairs x 64 dims of interpreter dispatch was the whole query's cost;
+    measured 1.5 s -> 0.55 s at sf0.1).
+
+    The batch rides the closure to every task, which is a broadcast, so
+    it is only collected when the optimizer's size estimate of the
+    query side (plan statistics, no job) is within
+    ``spark.sql.autoBroadcastJoinThreshold``; above it this returns None
+    and the caller takes the join form.
 
     Score values differ from the sequential JVM fold only in float
-    accumulation ORDER (last-ulp); every consumer is rank-only and the
-    fixture margin tests pin adjacent top-(k+1) gaps >= 1.9e-5 (~1e8 x
-    accumulation noise) at every bundled SF, the same precondition the
-    DuckDB oracle hash-match already relies on. Semantics preserved
-    exactly: zero-norm vectors and self-matches (vec_id == query id)
-    are excluded, null vectors never score. Returns None when the query
-    batch is empty (caller falls back to the join form, which yields
+    accumulation ORDER (last-ulp); every consumer is rank-only and
+    ``test_knn_join_oracle_precondition_top_k_score_gaps`` pins the
+    registered query's adjacent top-(k+1) gaps: the smallest measured is
+    3.5e-3 (sf0.001; 9.2e-3 at sf0.01, 4.5e-3 at sf0.1), the same
+    precondition the DuckDB oracle hash-match already relies on.
+    Semantics preserved exactly: zero-norm vectors and self-matches
+    (vec_id == query id) are excluded, null vectors never score. Also
+    returns None when the query batch is empty (the join form yields
     the same empty result without special-casing numpy)."""
     import pandas as pd
     from pyspark.sql import types as T
 
     from .dedup import spread_for_python_stage
 
-    qrows = queries.select(id_col, vec_col).collect()
+    qside = queries.select(id_col, vec_col)
+    estimate = qside._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = qside.sparkSession._jsparkSession.sessionState().conf()
+    if int(estimate) > conf.autoBroadcastJoinThreshold():
+        return None
+    qrows = qside.collect()
     qrows = [
         r for r in qrows if r[vec_col] is not None and len(r[vec_col]) > 0
     ]

@@ -36,6 +36,15 @@ would without the cache, because the files it planned over are gone.
 ``bronze()`` stays a plain read: only ``sync()`` and ``rebuild()`` scan
 it, once each.
 
+A generation whose data files total at most
+``spark.sql.files.maxPartitionBytes`` (8 MB on a local master, see
+``session.configure_session``; Spark's 128 MB elsewhere) fits one scan
+split, so it is coalesced to one partition before it is persisted
+(one ``os.walk`` per load). A one-partition cached relation reports
+``SinglePartition``, so request-time counts, aggregates and global sorts
+over it plan no Exchange and each action runs as one job with one task.
+A larger generation keeps the scan's own split and its parallelism.
+
 Scale notes: each gold table is one narrow aggregate over silver; at
 100 TB you would (a) partition silver by request_year and z-order/sort by
 (agency_slug, id) for pruning, (b) rebuild gold incrementally from the
@@ -56,6 +65,20 @@ from ..foia import agencies as agencies_mod
 from ..foia import queries as queries_mod
 from ..foia import silver as silver_mod
 from ..foia.sync import Fetcher, SyncResult, run_sync
+
+
+def _data_bytes(path: str) -> int:
+    """Bytes of the data files under ``path``; like Spark's file listing,
+    it skips names starting with ``_`` or ``.`` (metadata, temp dirs)."""
+    total = 0
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        total += sum(
+            os.path.getsize(os.path.join(d, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return total
 
 
 class MedallionPipeline:
@@ -102,11 +125,14 @@ class MedallionPipeline:
             # Spark's cache manager matches plain reads of one path to one
             # entry, so an old DataFrame would silently serve the new
             # generation's cache; the option keeps each generation distinct
-            df = (
-                self.spark.read.option("medallion.generation", f"{gen[0]}.{gen[1]}")
-                .parquet(path)
-                .persist()
-            )
+            df = self.spark.read.option(
+                "medallion.generation", f"{gen[0]}.{gen[1]}"
+            ).parquet(path)
+            # fits one scan split: hold it in one partition
+            split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            if _data_bytes(path) <= split:
+                df = df.coalesce(1)
+            df = df.persist()
             df.count()
             self._resident[rel] = (gen, df)
             return df

@@ -310,21 +310,17 @@ def nation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def status_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10/J5 resolution-timeline shape: last-90-day daily pivot with dense
-    date-spine zero-fill (agencyResolutionTimeline, agencies.ts:186-263).
-    The spine explodes from a 1-row bounds aggregate — broadcast join."""
+    zero-fill (agencyResolutionTimeline, agencies.ts:186-263). The window
+    ends at the data's own last order date."""
     o = load_table(spark, sf_dir, "orders")
-    bounds = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("hi")).select(
-        F.date_sub("hi", 89).alias("lo"), "hi"
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi")).alias("date")
-    )
+    hi = F.max("date")
     tl = timeline.daily_pivot_timeline(
         o,
         F.col("o_orderdate"),
         F.col("o_orderstatus"),
         ["F", "O", "P"],
-        spine,
+        F.date_sub(hi, 89),
+        hi,
     )
     return tl.select(
         _d("date").alias("date"),

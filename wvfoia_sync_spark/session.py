@@ -13,6 +13,7 @@ Two concerns:
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +32,16 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
 }
+
+
+def _swallowed(what: str, exc: BaseException) -> None:
+    """One stderr line for an exception the session set-up tolerates."""
+    first = str(exc).strip().splitlines()[:1]
+    print(
+        f"wvfoia_sync_spark.session: ignored {type(exc).__name__} while {what}: "
+        + "".join(first),
+        file=sys.stderr,
+    )
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -55,8 +66,8 @@ def _ship_package(spark: SparkSession) -> None:
     try:
         if any(marker in p for p in sc._python_includes):
             return
-    except Exception:
-        pass
+    except Exception as e:
+        _swallowed("reading sc._python_includes (shipping the package again)", e)
     tmpdir = tempfile.mkdtemp(prefix="spark-graft-pyfiles-")
     zip_path = os.path.join(tmpdir, marker)
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
@@ -75,17 +86,17 @@ def configure_session(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as e:
             # Conf not settable on this build — engine degrades gracefully
             # (only the events nanos reader strictly requires its conf).
-            pass
+            _swallowed(f"setting {k}={v}", e)
     try:
         _ship_package(spark)
-    except Exception:
+    except Exception as e:
         # no sparkContext access (e.g. Connect) — closures that only
         # capture by value still work; by-reference ones need pyFiles
         # provided by the deployment instead
-        pass
+        _swallowed("shipping the package to the Python workers", e)
     try:
         # Partition-size-to-data sizing (SURVEY §6 / scale brief): the
         # local test corpus is ~10 MB/table, so the 128 MB default collapses
@@ -98,8 +109,8 @@ def configure_session(spark: SparkSession) -> SparkSession:
                 "spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
             )
-    except Exception:
-        pass
+    except Exception as e:
+        _swallowed("sizing spark.sql.files.maxPartitionBytes for a local master", e)
     return spark
 
 
