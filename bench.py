@@ -560,8 +560,9 @@ def main() -> None:
     # skip the interpreter/atexit teardown where the abort happens.
     try:
         spark.stop()
-    except Exception:
-        pass
+    except Exception as exc:
+        first = "".join(str(exc).strip().splitlines()[:1])
+        print(f"bench: ignored {type(exc).__name__} while stopping Spark: {first}", file=sys.stderr)
     sys.stdout.flush()
     sys.stderr.flush()
     os._exit(0)

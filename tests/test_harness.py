@@ -139,6 +139,18 @@ def test_configure_session_names_each_tolerated_failure(capsys):
     assert "maxPartitionBytes" in lines[1]
 
 
+def test_session_turns_off_call_site_capture(spark):
+    """get_spark builds its session with DataFrame call-site capture off,
+    and PySpark's process-wide cache of the flag reads it as off, so a
+    functions/Column call makes no session, conf or origin round trips."""
+    import pyspark.errors.utils as perr
+    import pyspark.sql.functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("x")  # a wrapped call fills the cache if nothing has yet
+    assert perr._enable_debugging_cache is False
+
+
 def test_driver_window_fully_resolvable():
     """Every DRIVER_WINDOW name must resolve to a registered query (the
     runtime path silently skips unknowns so a rename can't zero the

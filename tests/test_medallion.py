@@ -220,6 +220,59 @@ def test_timeline_runs_one_exchange_free_job_over_resident_input(
     assert "Exchange" not in plan  # covers BroadcastExchange too
 
 
+def test_agency_route_build_stays_under_its_py4j_round_trip_floor(
+    spark, fixture_dir, tmp_path, monkeypatch
+):
+    """Building and collecting the agency route's timeline + totals over a
+    resident generation is a few hundred py4j round trips, not the ~2050
+    that per-call call-site capture and a Column tree per bucket made.
+    Only this thread's calls count: py4j's finalizer thread sends one
+    per Java object that earlier garbage releases, whenever it runs."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from wvfoia_sync_spark.foia import agencies
+
+    silver = _built(spark, fixture_dir, str(tmp_path / "lake")).silver()
+
+    def route():
+        return agencies.timeline_window_totals(
+            agencies.resolution_timeline(silver, SLUG, TODAY, days=365)
+        ).collect()
+
+    expected = route()  # warm: first-use lookups are not per request
+    calls = []
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    assert route() == expected
+    monkeypatch.undo()
+    assert expected[0]["total"] > 0
+    assert 0 < len(calls) <= 250, len(calls)
+
+
+def test_agency_feed_runs_one_job_over_resident_input(spark, fixture_dir, tmp_path):
+    """The feed reads page 1, which never clamps, so it runs the page job
+    alone, with no count job."""
+    from wvfoia_sync_spark.foia import rss
+
+    pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
+    silver = pipe.silver()
+    name = (
+        pipe.gold("agency_stats").where(F.col("agency_slug") == SLUG).first()["agency_canonical"]
+    )
+    doc, jobs = _jobs(spark, lambda: rss.agency_feed(silver, name, SLUG))
+    assert jobs == 1
+    assert f"agency-{SLUG}-entry-" in doc
+
+
 def _serving_results(silver):
     from wvfoia_sync_spark.foia import agencies, queries
     from wvfoia_sync_spark.foia.schema import EntrySearchOptions

@@ -21,30 +21,6 @@ from ..operators import relational
 from .schema import EntrySearchOptions, PageCursor
 
 
-def agency_candidates(
-    opts_agency: str,
-    aliases_map: dict[str, str],
-    agency_dim=None,
-) -> list[str]:
-    """U8 agencyNameCandidates (corrections.ts:59-64): the ORIGINAL
-    spellings that identify the requested agency — the input, its
-    canonical, and (when the agency_dim frame is supplied) every raw
-    spelling whose canonical matches, mirroring the reference's DISTINCT
-    alias-spelling lookup. ``aliases_map`` is
-    normalize_token(spelling) -> canonical; its token KEYS are matching
-    keys, not spellings, and are deliberately NOT returned."""
-    canonical = aliases_map.get(normalize_token(opts_agency), opts_agency)
-    cands = {opts_agency, canonical}
-    if agency_dim is not None:
-        cands.update(
-            r["agency"]
-            for r in agency_dim.where(
-                F.col("agency_canonical") == canonical
-            ).select("agency").collect()
-        )
-    return sorted(cands)
-
-
 def bind_where(opts: EntrySearchOptions, aliases_map: dict[str, str] | None = None) -> Column | None:
     """F1-F5 predicate tree (reference bindWhere, entries.ts:28-63), over
     SILVER columns (dates already corrected — F6 is a silver no-op).
@@ -93,6 +69,14 @@ def order_by(sort: str) -> list[Column]:
     return [F.col("id").desc()]  # newest_entry (default)
 
 
+def filter_entries(
+    silver: DataFrame, opts: EntrySearchOptions, aliases_map: dict[str, str] | None = None
+) -> DataFrame:
+    """``silver`` under ``bind_where``'s predicate (all rows when it has none)."""
+    pred = bind_where(opts, aliases_map)
+    return silver.where(pred) if pred is not None else silver
+
+
 @dataclass(frozen=True)
 class Page:
     rows: DataFrame
@@ -108,8 +92,7 @@ def list_entries(
     aliases_map: dict[str, str] | None = None,
 ) -> Page:
     """§3.1 end-to-end: filter -> count -> clamp -> page (entries.ts:87-139)."""
-    pred = bind_where(opts, aliases_map)
-    filtered = silver.where(pred) if pred is not None else silver
+    filtered = filter_entries(silver, opts, aliases_map)
     total = filtered.count()
     page, total_pages = relational.clamp_page(total, cursor.page, cursor.page_size)
     rows = relational.paginate(filtered, order_by(opts.sort), page, cursor.page_size)

@@ -160,19 +160,20 @@ def agency_feed(
 ) -> str:
     """Per-agency feed (reference src/pages/agencies/[slug]/feed.xml.ts:
     12,26-39): page 1 of AGENCY_FEED_LIMIT in newest_entry order, scoped
-    to the agency — composed from the same ``list_entries`` the entry
-    search uses, so the Spark-side selection is the audited
-    TakeOrderedAndProject page, never a bespoke scan."""
-    from .queries import list_entries
-    from .schema import EntrySearchOptions, PageCursor
+    to the agency — built from the entry search's own predicate, order
+    and ``paginate``, so the Spark-side selection is the audited
+    TakeOrderedAndProject page, never a bespoke scan. Page 1 never
+    clamps, so the search's count job would only be thrown away: the
+    feed is one job."""
+    from ..operators.relational import paginate
+    from .queries import filter_entries, order_by
+    from .schema import EntrySearchOptions
 
-    page = list_entries(
-        silver,
-        EntrySearchOptions(agency=agency_name, sort="newest_entry"),
-        PageCursor(page=1, page_size=AGENCY_FEED_LIMIT),
-        aliases_map,
+    opts = EntrySearchOptions(agency=agency_name, sort="newest_entry")
+    page = paginate(
+        filter_entries(silver, opts, aliases_map), order_by(opts.sort), 1, AGENCY_FEED_LIMIT
     )
-    rows = [r.asDict() for r in page.rows.collect()]
+    rows = [r.asDict() for r in page.collect()]
     items = [agency_entry_to_item(r, slug, base_url) for r in rows]
     last_build = parse_feed_date(_first_date(rows[0])) if rows else None
     return build_rss_document(

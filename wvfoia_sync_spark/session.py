@@ -3,7 +3,16 @@
 Two concerns:
 
 1. ``get_spark`` builds a local session with scale-appropriate defaults
-   (AQE on, sensible shuffle partitioning) for tests/bench.
+   (AQE on, sensible shuffle partitioning) for tests/bench. It also turns
+   off PySpark's DataFrame call-site capture
+   (``spark.python.sql.dataFrameDebugging.enabled``), which otherwise
+   wraps every ``Column`` method and ``F.col`` call in a session lookup,
+   a conf read and a JVM origin set and clear: about ten py4j round trips
+   per call, most of a small serving request's build time. The cost: an
+   analysis error no longer names the Python line that built the failing
+   expression (the message and the plan are unchanged). The flag is a
+   static conf, so ``configure_session`` cannot apply it; a session built
+   elsewhere (one handed to ``__spark_entry__``) keeps its own setting.
 2. ``configure_session`` applies the *runtime-settable* confs this engine
    needs on any externally-provided session (the verify driver builds its
    own SparkSession, so everything here must be ``spark.conf.set``-able,
@@ -145,6 +154,8 @@ def get_spark(app_name: str = "wvfoia-sync-spark", cpus: int | None = None) -> S
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # static conf: call-site capture off (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # keep managed tables (bucketed writes) out of the repo CWD
         .config(
             "spark.sql.warehouse.dir",
