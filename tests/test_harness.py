@@ -244,3 +244,35 @@ def test_adjudication_rearm_band():
     assert not rearms("sessionization_stream", br, 4.6)  # wall-noise only
     # unigram's observed single-run noise point (5.54, 1.74) must NOT arm
     assert not rearms("unigram_surprisal", 5.54, 1.74)
+
+
+def test_every_package_function_has_a_caller():
+    """Every undecorated top-level def or class in the package is named
+    somewhere besides its own definition: in the package, the tests, the
+    tools, the benchmark or the driver entry points. A helper nothing
+    calls fails here instead of lingering. Decorated functions count as
+    used (the decorator, e.g. ``@register``, is their caller), and a test
+    reference counts as use (tested public API stays)."""
+    import ast
+    import re
+    from collections import Counter
+
+    root = Path(__file__).resolve().parent.parent
+    sources = [
+        p
+        for d in ("wvfoia_sync_spark", "tests", "tools", "perfbench")
+        for p in (root / d).rglob("*.py")
+    ] + [root / "bench.py", root / "__spark_entry__.py"]
+    # whole-word occurrences of every identifier-shaped word
+    words = Counter(w for p in sources for w in re.findall(r"\w+", p.read_text()))
+
+    defined = Counter()
+    for p in (root / "wvfoia_sync_spark").rglob("*.py"):
+        for node in ast.parse(p.read_text()).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+            ):
+                defined[node.name] += 1
+    uncalled = sorted(n for n, k in defined.items() if words[n] <= k)
+    assert not uncalled, f"top-level names nothing references: {uncalled}"

@@ -4,7 +4,7 @@ of the silver table."""
 import pyspark.sql.functions as F
 
 from tests.conftest import assert_frames_equal
-from wvfoia_sync_spark.foia import agencies, queries
+from wvfoia_sync_spark.foia import agencies
 from wvfoia_sync_spark.plans import incremental
 
 TODAY = "2026-08-01"
@@ -35,12 +35,3 @@ def test_incremental_agency_stats_equals_full(silver_df):
     mr = {r["agency_slug"]: dict(r["resolutions"] or {}) for r in merged.collect()}
     assert fr == mr
 
-
-def test_incremental_resolution_counts(silver_df):
-    cutoff = silver_df.approxQuantile("id", [0.5], 0.0)[0]
-    full = queries.resolution_counts(silver_df)
-    merged = incremental.merge_resolution_counts(
-        queries.resolution_counts(silver_df.where(F.col("id") <= cutoff)),
-        queries.resolution_counts(silver_df.where(F.col("id") > cutoff)),
-    )
-    assert_frames_equal(full, merged.toPandas())

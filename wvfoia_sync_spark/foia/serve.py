@@ -2,7 +2,7 @@
 Spark hot path). Reference: src/lib/utils.ts.
 
 These exist for parity with the reference's rendering functions (U12, U13,
-U14, U18, U19, U20, U27, U28 in SURVEY §2.8); they operate on collected
+U14, U18, U20, U27, U28 in SURVEY §2.8); they operate on collected
 rows/values at the API edge.
 """
 
@@ -65,24 +65,6 @@ def format_currency(value: str | None) -> str:
 def fmt_number(value: float) -> str:
     """U18 fmtNumber (utils.ts:156-158)."""
     return f"{round(value):,}"
-
-
-def format_time_ago(iso_ts: str, now: dt.datetime | None = None) -> str:
-    """U19 formatTimeAgo (utils.ts:174-207)."""
-    t = dt.datetime.fromisoformat(iso_ts.replace("Z", "+00:00"))
-    now = now or dt.datetime.now(dt.timezone.utc)
-    sec = max(0, int((now - t).total_seconds()))
-    for unit, size in (
-        ("year", 31536000),
-        ("month", 2592000),
-        ("day", 86400),
-        ("hour", 3600),
-        ("minute", 60),
-    ):
-        q = sec // size
-        if q:
-            return f"{q} {unit}{'s' if q > 1 else ''} ago"
-    return "just now"
 
 
 def build_page_numbers(current: int, total: int) -> list[int | None]:

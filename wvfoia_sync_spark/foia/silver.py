@@ -24,7 +24,7 @@ broadcast-joined back. All other derivations are codegen expressions.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.normalize import (
     normalize_agency_name,
@@ -117,7 +117,3 @@ def write_silver(df: DataFrame, path: str) -> None:
         .partitionBy("request_year")
         .parquet(path)
     )
-
-
-def read_silver(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

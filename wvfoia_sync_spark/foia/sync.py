@@ -27,6 +27,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .queries import latest_entry_id
 from .schema import ENTRY_COLUMNS, ENTRIES_SCHEMA
 
 DRIFT_TOLERANCE = 3  # consecutive missing ids before stopping (sync.ts:8)
@@ -369,9 +370,7 @@ def run_sync(
     end (no uncrossed 3-gap seen yet). ``fetch_errors`` > 0 means the
     frontier stopped early at a still-failing id; the watermark then
     re-probes it next wave."""
-    start_id = (
-        existing.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).first()["m"] + 1
-    )
+    start_id = latest_entry_id(existing) + 1
     wrapped = with_retries(fetcher, retry_policy) if retry_policy else fetcher
     fetched = fetch_window(spark, start_id, window, wrapped).cache()
     try:

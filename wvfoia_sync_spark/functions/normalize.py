@@ -44,12 +44,6 @@ def diff_days(from_col: Column, to_col: Column) -> Column:
 # -------------------------------------------------------------- strings ---
 
 
-def clean_text(col: Column | str) -> Column:
-    """U3 cleanText (sync.ts:78-81): collapse whitespace runs, trim."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
 def slugify_col(col: Column | str) -> Column:
     """U4 slugify (utils.ts:42-49) as a Column expression."""
     c = F.col(col) if isinstance(col, str) else col
@@ -60,33 +54,12 @@ def slugify_col(col: Column | str) -> Column:
     return F.regexp_replace(c, r"^-+|-+$", "")
 
 
-def normalize_key(col: Column | str) -> Column:
-    """U2 normalizeKey (sync.ts:50-57): scraped label -> snake_case key."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.lower(F.trim(F.regexp_replace(c, ":", "")))
-    c = F.regexp_replace(c, r"[^a-z0-9]+", "_")
-    return F.regexp_replace(c, r"^_+|_+$", "")
-
-
 def parse_fee(col: Column | str) -> Column:
     """U14 fee parse (utils.ts:111-121): strip non [0-9.-], cast to
     decimal(12,2); unparseable/null -> null."""
     c = F.col(col) if isinstance(col, str) else col
     cleaned = F.regexp_replace(c, r"[^0-9.\-]", "")
     return F.when(cleaned != "", cleaned.try_cast("decimal(12,2)"))
-
-
-def fee_sort_key(col: Column | str) -> Column:
-    """O1 highest_fee sort key. Documented divergence from SQLite's
-    ``CAST(fee AS INTEGER)`` leading-numeral parse (utils.ts:8): we sort by
-    the U14-parsed amount, so '$25.00' sorts as 25, not 0 (SURVEY §7)."""
-    return parse_fee(col)
-
-
-def format_requestor(first: Column, middle: Column, last: Column, org: Column) -> Column:
-    """U15 formatRequestor (utils.ts:123-126)."""
-    name = F.nullif(F.concat_ws(" ", first, middle, last), F.lit(""))
-    return F.coalesce(name, org, F.lit("--"))
 
 
 # ---------------------------------------------------------- resolutions ---
@@ -105,19 +78,6 @@ def resolution_bucket(col: Column | str) -> Column:
         .when(v == "exempted", "exempted")
         .when(v == "rejected", "rejected")
         .otherwise("other")
-    )
-
-
-def resolution_sort_score(col: Column | str) -> Column:
-    """U17 resolutionSortScore (utils.ts:28-31): fixed display rank."""
-    c = F.col(col) if isinstance(col, str) else col
-    v = F.lower(F.trim(c))
-    return (
-        F.when(v == "granted", 0)
-        .when(v == "granted in part", 1)
-        .when(v == "exempted", 2)
-        .when(v == "rejected", 3)
-        .otherwise(F.lit(2147483647))
     )
 
 

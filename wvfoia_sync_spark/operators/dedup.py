@@ -146,13 +146,6 @@ def source_dup_matrix(
 # ------------------------------------------------------- token Jaccard ---
 
 
-def _token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.array_sort(F.array_distinct(tokens(text_col))).alias("toks"),
-    )
-
-
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,

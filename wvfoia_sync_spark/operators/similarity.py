@@ -397,12 +397,12 @@ def cosine_near_dup_pairs(
 
 
 
-# Measured exact-vs-banded crossover (tools/lsh_crossover_probe.py,
-# SCALE_probe_lsh_crossover.jsonl): the banded plan overtakes the exact
-# all-pairs join from ~12k vectors (5.3 s vs 5.5 s at 12k, 43 s vs 102 s
-# at 48k, recall 1.0 at every probe point). Below it the exact block
-# matmul is sub-second and strictly dominates (no signature stage, no
-# candidate join, no recall question).
+# Measured exact-vs-banded crossover (SCALE_probe_lsh_crossover.jsonl):
+# the banded plan overtakes the exact all-pairs join from ~12k vectors
+# (5.3 s vs 5.5 s at 12k, 43 s vs 102 s at 48k, recall 1.0 at every
+# probe point). Below it the exact block matmul is sub-second and
+# strictly dominates (no signature stage, no candidate join, no recall
+# question).
 COSINE_EXACT_CROSSOVER = 12_000
 
 

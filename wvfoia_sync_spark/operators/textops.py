@@ -1,5 +1,5 @@
 """Text-analysis operators over a document corpus: token counting, quality
-scoring, language ID, fingerprinting (LLM-training-pipeline surface).
+scoring (LLM-training-pipeline surface).
 
 All codegen column expressions from functions.text — a 100 TB corpus scan
 stays in WholeStageCodegen with zero Python round-trips.
@@ -12,22 +12,7 @@ import threading
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.text import fingerprint, lang_id, quality_metrics, token_count
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set: counts, ratios, language guess,
-    fingerprint. One projection, no shuffle."""
-    qm = quality_metrics(text_col)
-    return df.select(
-        "*",
-        qm["n_tokens"].alias("n_tokens"),
-        qm["alpha_ratio"].alias("alpha_ratio"),
-        qm["stopword_ratio"].alias("stopword_ratio"),
-        qm["avg_token_len"].alias("avg_token_len"),
-        lang_id(text_col).alias("lang_guess"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
+from ..functions.text import quality_metrics, token_count
 
 
 def quality_filter(

@@ -121,15 +121,6 @@ def merge_agency_stats(
     )
 
 
-def merge_resolution_counts(old: DataFrame, delta: DataFrame) -> DataFrame:
-    """resolution_counts gold merge: additive on the resolution key."""
-    return (
-        old.unionByName(delta)
-        .groupBy("resolution")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
 def merge_partial_stats(
     old: DataFrame,
     delta: DataFrame,

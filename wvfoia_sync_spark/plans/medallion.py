@@ -7,9 +7,10 @@ lifecycle (SURVEY §7):
   by id (S7). The reference's ``entries`` D1 table.
 - **silver**: corrections applied once, agency canonicalized, dates/fee
   typed, search tokens derived (what the reference recomputes per read).
-- **gold**: agency_stats, resolution_timeline, home_stats,
-  resolution_counts, latest_snapshot — the reference's KV-cached query
-  results, materialized as tables instead.
+- **gold**: agency_stats and home_stats, the two cached query results
+  that serving reads as tables. The reference's other cached queries
+  (latest snapshot A3, resolution counts A5, timeline A10) are computed
+  per request over the resident silver generation, so no gold holds them.
 
 Rebuild-on-sync == the reference's flush-all-caches-on-write policy
 (sync.ts:202, ST3): any sync that adds rows invalidates every cached
@@ -47,9 +48,11 @@ A larger generation keeps the scan's own split and its parallelism.
 
 Scale notes: each gold table is one narrow aggregate over silver; at
 100 TB you would (a) partition silver by request_year and z-order/sort by
-(agency_slug, id) for pruning, (b) rebuild gold incrementally from the
-sync delta instead of full recompute (counts and sums are decomposable),
-(c) store bronze/silver as Delta/Iceberg for real MERGE + time travel.
+(agency_slug, id) for pruning, (b) maintain agency_stats and home_stats
+from the sync delta instead of full recompute (their counts and sums are
+decomposable; ``plans.incremental.merge_agency_stats`` is the agency_stats
+merge), (c) store bronze/silver as Delta/Iceberg for real MERGE + time
+travel.
 """
 
 from __future__ import annotations
@@ -201,14 +204,15 @@ class MedallionPipeline:
         aliases: DataFrame | None = None,
         renames: DataFrame | None = None,
     ) -> None:
-        """Silver + all gold tables from bronze (the reference's
-        'recompute everything the caches held' moment).
+        """Silver + the gold tables serving reads (agency_stats,
+        home_stats) from bronze: the reference's 'recompute everything the
+        caches held' moment.
 
-        Full recompute is always correct; for append-only sync deltas the
-        additive gold tables (agency_stats, resolution_counts) can instead
-        be merged from a delta-only aggregate via plans.incremental —
-        equivalence proven in tests/test_incremental.py. Fall back to this
-        full rebuild whenever corrections/dimensions change existing rows."""
+        Full recompute is always correct; for append-only sync deltas
+        agency_stats could instead be merged from a delta-only aggregate
+        via plans.incremental.merge_agency_stats (equivalence proven in
+        tests/test_incremental.py). Fall back to this full rebuild
+        whenever corrections/dimensions change existing rows."""
         from pyspark.sql import Observation
         import pyspark.sql.functions as F
 
@@ -225,15 +229,10 @@ class MedallionPipeline:
         )
         silver_mod.write_silver(sdf, self._p("silver"))
         self.last_silver_quality = dict(obs.get)
-        sdf = self.silver()  # the new generation: five golds, one scan
+        sdf = self.silver()  # the new generation: both golds, one scan
         golds: dict[str, DataFrame] = {
             "agency_stats": agencies_mod.agency_stats(sdf, self.today),
-            "resolution_timeline": agencies_mod.resolution_timeline(
-                sdf, None, self.today, days=None
-            ),
             "home_stats": queries_mod.home_stats(sdf, self.today),
-            "resolution_counts": queries_mod.resolution_counts(sdf),
-            "latest_snapshot": queries_mod.latest_entries_snapshot(sdf),
         }
         for name, df in golds.items():
             df.write.mode("overwrite").parquet(self._p("gold", name))

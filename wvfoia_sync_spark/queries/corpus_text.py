@@ -1876,7 +1876,7 @@ def exact_substring_delta_report_incremental(
     stored scan prunes to the delta grams' gbucket partitions, the
     join's build side is delta-sized (AQE broadcasts it), and every
     aggregate is map-side combinable — work scales with the DELTA, not
-    the corpus (probe: tools/delta_report_probe.py; the priced trade
+    the corpus (probe: SCALE_probe_r12_deltareport.jsonl; the priced trade
     from the full report's docstring, now paid). Index build cost is
     one corpus pass amortized across every report (idempotent
     rename-if-absent publish; O(|delta|) appends thereafter).
