@@ -48,6 +48,22 @@ def silver_duck(silver_df, fixture_dir):
     return con
 
 
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched on this thread), counted
+    in a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_frames_equal(spark_df, duck_df, sort_cols=None):
     """Canonical compare mirroring tools/check_oracle.py."""
     import pandas as pd

@@ -6,6 +6,7 @@ import os
 import pandas as pd
 import pyspark.sql.functions as F
 
+from tests.conftest import spark_jobs
 from wvfoia_sync_spark.foia import sync
 from wvfoia_sync_spark.plans.medallion import MedallionPipeline
 
@@ -80,21 +81,6 @@ def test_silver_quality_observed(spark, fixture_dir, tmp_path):
 # ------------------------------------------------- serving generations ---
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn launched), counted in a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _built(spark, fixture_dir, root):
     pipe = MedallionPipeline(spark, root, today=TODAY)
     pipe.init_bronze(spark.read.parquet(f"{fixture_dir}/entries.parquet"))
@@ -106,7 +92,7 @@ def test_same_generation_is_one_object_and_no_jobs(spark, fixture_dir, tmp_path)
     pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
     for open_ in (pipe.silver, lambda: pipe.gold("agency_stats")):
         first = open_()
-        again, jobs = _jobs(spark, open_)
+        again, jobs = spark_jobs(spark, open_)
         assert again is first
         assert jobs == 0
 
@@ -187,12 +173,12 @@ def test_page_queries_run_one_job_over_resident_input(spark, fixture_dir, tmp_pa
 
     pipe = _built(spark, fixture_dir, str(tmp_path / "lake"))
     silver, stats = pipe.silver(), pipe.gold("agency_stats")
-    page, jobs = _jobs(
+    page, jobs = spark_jobs(
         spark, lambda: queries.list_entries(silver, EntrySearchOptions(resolution=("Granted",)))
     )
     assert jobs == 1
     assert 0 < len(page.rows.collect()) <= page.total
-    page, jobs = _jobs(spark, lambda: agencies.agencies_page(stats, term="department"))
+    page, jobs = spark_jobs(spark, lambda: agencies.agencies_page(stats, term="department"))
     assert jobs == 1
     assert 0 < len(page.rows.collect()) <= page.total
 
@@ -215,7 +201,7 @@ def test_timeline_runs_one_exchange_free_job_over_resident_input(
     totals = agencies.timeline_window_totals(
         agencies.resolution_timeline(silver, SLUG, TODAY, days=365)
     )
-    rows, jobs = _jobs(spark, totals.collect)
+    rows, jobs = spark_jobs(spark, totals.collect)
     assert jobs == 1
     assert rows[0]["total"] > 0
     plan = totals._jdf.queryExecution().executedPlan().toString()
@@ -270,7 +256,7 @@ def test_agency_feed_runs_one_job_over_resident_input(spark, fixture_dir, tmp_pa
     name = (
         pipe.gold("agency_stats").where(F.col("agency_slug") == SLUG).first()["agency_canonical"]
     )
-    doc, jobs = _jobs(spark, lambda: rss.agency_feed(silver, name, SLUG))
+    doc, jobs = spark_jobs(spark, lambda: rss.agency_feed(silver, name, SLUG))
     assert jobs == 1
     assert f"agency-{SLUG}-entry-" in doc
 

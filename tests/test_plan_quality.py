@@ -376,7 +376,7 @@ def test_knn_join_query_side_above_broadcast_threshold_takes_join_form(spark):
     within spark.sql.autoBroadcastJoinThreshold. Above it the join form
     runs instead, with the same ranks; the size check itself runs no
     Spark job (building the Arrow form runs exactly its one collect)."""
-    from tests.test_medallion import _jobs
+    from tests.conftest import spark_jobs
     from wvfoia_sync_spark.operators import similarity
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -386,14 +386,14 @@ def test_knn_join_query_side_above_broadcast_threshold_takes_join_form(spark):
     def build():
         return similarity.knn_join_exact(emb, queries, k=3)
 
-    arrow, jobs = _jobs(spark, build)
+    arrow, jobs = spark_jobs(spark, build)
     assert jobs == 1
     assert "MapInPandas" in plan(arrow)
     key = "spark.sql.autoBroadcastJoinThreshold"
     before = spark.conf.get(key)
     spark.conf.set(key, "1024")  # below the query side's estimate
     try:
-        joined, jobs = _jobs(spark, build)
+        joined, jobs = spark_jobs(spark, build)
         p = plan(joined)
         ranks = sorted(joined.select(cols).collect())
     finally:

@@ -41,6 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import derived
+from ..sources.tables import read_parquet
 from . import segments, similarity
 
 # the manifest doubles as the stats file location of the v1 format;
@@ -268,7 +269,7 @@ def load_ann_index(spark: SparkSession, path: str) -> DataFrame:
     entirely, so queries over an un-upserted index pay zero resolution
     overhead — the shared segment-core pattern."""
     bound = segments.snapshot_seg(segments.read_manifest(path, MANIFEST))
-    df = segments.bounded(spark.read.parquet(path), bound)
+    df = segments.bounded(read_parquet(spark, path), bound)
     if bound == 0:
         return df.drop("seg")
     id_col = _index_id_col(df)

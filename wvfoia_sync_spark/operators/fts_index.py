@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import derived
+from ..sources.tables import read_parquet
 from . import segments
 from .fts import with_tokens
 
@@ -158,13 +159,13 @@ def load_fts_index(spark: SparkSession, index_dir: str) -> DataFrame:
     now pays zero resolution overhead on every FTS query)."""
     bound = segments.snapshot_seg(segments.read_manifest(index_dir, MANIFEST))
     postings = segments.bounded(
-        spark.read.parquet(os.path.join(index_dir, "postings")), bound
+        read_parquet(spark, os.path.join(index_dir, "postings")), bound
     )
     if bound == 0:
         return postings.select("token", "id")
     live = segments.live_view(
         segments.bounded(
-            spark.read.parquet(os.path.join(index_dir, "live")), bound
+            read_parquet(spark, os.path.join(index_dir, "live")), bound
         ),
         "id",
     )
@@ -179,11 +180,11 @@ def dead_fraction(spark: SparkSession, index_dir: str) -> float:
     if bound == 0:
         return 0.0
     postings = segments.bounded(
-        spark.read.parquet(os.path.join(index_dir, "postings")), bound
+        read_parquet(spark, os.path.join(index_dir, "postings")), bound
     )
     live = segments.live_view(
         segments.bounded(
-            spark.read.parquet(os.path.join(index_dir, "live")), bound
+            read_parquet(spark, os.path.join(index_dir, "live")), bound
         ),
         "id",
     )

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import text as text_fns
 from ..sources import derived
+from ..sources.tables import read_parquet
 from . import segments
 
 _MANIFEST = "_manifest.json"
@@ -296,7 +297,7 @@ def append_gram_index(
 def _bounded(spark: SparkSession, path: str, sub: str, max_seg: int) -> DataFrame:
     """Scan one index table bounded to the manifest snapshot (see
     segments.bounded — one copy of the predicate)."""
-    return segments.bounded(spark.read.parquet(f"{path}/{sub}"), max_seg)
+    return segments.bounded(read_parquet(spark, f"{path}/{sub}"), max_seg)
 
 
 def load_gram_index(spark: SparkSession, path: str) -> DataFrame:

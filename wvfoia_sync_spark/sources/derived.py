@@ -48,7 +48,10 @@ def content_fingerprint(*paths: str) -> str:
             for root, _dirs, names in os.walk(p):
                 for n in names:
                     fp = os.path.join(root, n)
-                    entries.append((os.path.relpath(fp, p), os.stat(fp)))
+                    try:
+                        entries.append((os.path.relpath(fp, p), os.stat(fp)))
+                    except FileNotFoundError:
+                        pass  # removed mid-walk (a writer's temp file)
         elif os.path.exists(p):
             entries.append((os.path.basename(p), os.stat(p)))
         for rel, st in sorted(entries):

@@ -14,6 +14,7 @@ batch-equivalent runs — the tests assert stream output == batch output.
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import shutil
 
@@ -24,6 +25,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators import segments
 from ..session import configure_session
+from ..sources.tables import read_parquet
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -42,10 +44,6 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 # read_events_stream probes the actual batch-read type and adapts.
 EVENTS_SCHEMA = _events_schema(T.TimestampNTZType())
 
-# Per-process memo of the probed physical ts type per (dir, glob) — a
-# schema property of static files, not data (see read_events_stream).
-_TS_TYPE_CACHE: dict[tuple[str, str | None], str] = {}
-
 
 def read_events_stream(
     spark: SparkSession,
@@ -62,24 +60,19 @@ def read_events_stream(
     the physical TIMESTAMP(NANOS) column exactly like
     sources.tables.load_table, whatever this Spark build reads it as:
     NTZ micros (pyspark 4.1 native), bigint nanos (builds honoring the
-    legacy nanosAsLong conf), or plain TIMESTAMP. The batch probe read
-    costs one driver-side footer fetch, no data scan."""
+    legacy nanosAsLong conf), or plain TIMESTAMP. The type comes from a
+    batch read of the directory (or of the first file ``glob`` matches)
+    through sources.tables.read_parquet, which infers it once per file
+    generation: streaming queries build two sources over one directory,
+    and a regenerated directory is probed again."""
     configure_session(spark)
-    # The probe is a driver-side footer read, but batch-DataFrame
-    # construction still schedules a schema-inference job (~0.1 s); the
-    # physical ts TYPE of a directory is a fixed schema property, so memo
-    # it per (dir, glob) for the process (r13 optimization) — streaming
-    # queries build two sources over the same directory and pay it twice.
-    cache_key = (events_dir, glob)
-    ts_type = _TS_TYPE_CACHE.get(cache_key)
-    if ts_type is None:
-        probe = spark.read
-        if glob:
-            probe = probe.option("pathGlobFilter", glob)
-        ts_type = dict(probe.parquet(events_dir).dtypes).get(
-            "ts", "timestamp_ntz"
-        )
-        _TS_TYPE_CACHE[cache_key] = ts_type
+    probe = events_dir
+    if glob:
+        matched = sorted(fnmatch.filter(os.listdir(events_dir), glob))
+        if not matched:
+            raise FileNotFoundError(f"no file in {events_dir} matches {glob!r}")
+        probe = os.path.join(events_dir, matched[0])
+    ts_type = dict(read_parquet(spark, probe).dtypes).get("ts", "timestamp_ntz")
 
     if ts_type == "bigint":
         # integer `div` (see sources.tables.load_table: float division is
@@ -790,7 +783,7 @@ def _live_train_segs(
     never run it on the much larger bands table). ``max_seg`` bounds
     the view to a manifest snapshot (segments committed by a
     concurrent manifest-first append stay invisible)."""
-    rows = spark.read.parquet(f"{path}/shingles")
+    rows = read_parquet(spark, f"{path}/shingles")
     if max_seg is not None:
         rows = segments.bounded(rows, max_seg)
     return segments.live_view(rows, "train_id")
@@ -807,9 +800,9 @@ def load_band_index(
     entirely — zero resolution overhead until an append actually
     happens."""
     bound = segments.snapshot_seg(_band_manifest_read(path))
-    bands = segments.bounded(spark.read.parquet(f"{path}/bands"), bound)
+    bands = segments.bounded(read_parquet(spark, f"{path}/bands"), bound)
     shingles = segments.bounded(
-        spark.read.parquet(f"{path}/shingles"), bound
+        read_parquet(spark, f"{path}/shingles"), bound
     )
     if bound == 0:
         return bands.drop("seg"), shingles.drop("seg")
@@ -849,7 +842,7 @@ def band_index_staleness(spark: SparkSession, path: str) -> dict:
     bound = segments.snapshot_seg(man)
     if bound == 0:
         return {"max_seg": man["max_seg"], "stale_fraction": 0.0}
-    bands = segments.bounded(spark.read.parquet(f"{path}/bands"), bound)
+    bands = segments.bounded(read_parquet(spark, f"{path}/bands"), bound)
     live = _live_train_segs(spark, path, bound)
     return {
         "max_seg": man["max_seg"],
@@ -1081,10 +1074,10 @@ def streaming_near_dup_pruned(
         # fast path (no live join), which would otherwise read the new
         # segment's half-committed rows alongside the old ones
         idx = segments.bounded(
-            spark.read.parquet(f"{index_path}/bands"), bound
+            read_parquet(spark, f"{index_path}/bands"), bound
         ).where(F.col("pbucket").isin(pb))
         shingle_t = segments.bounded(
-            spark.read.parquet(f"{index_path}/shingles"), bound
+            read_parquet(spark, f"{index_path}/shingles"), bound
         ).withColumnRenamed("hs", "hs_t")
         if live is not None:  # stale-segment rows drop out of the join
             idx = idx.join(live, ["train_id", "seg"])
@@ -1140,7 +1133,7 @@ def streaming_near_dup_pruned(
             ),
             T.StructField(
                 "train_id",
-                spark.read.parquet(f"{index_path}/shingles")
+                read_parquet(spark, f"{index_path}/shingles")
                 .schema["train_id"]
                 .dataType,
             ),
