@@ -11,22 +11,21 @@ files first (cached in /tmp) so scans parallelize the way production
 tables do; the default "driver" layout benches the driver's
 single-row-group files unchanged.
 
-The external baseline (round-3 verdict item 5): unless
-SPARK_GRAFT_BENCH_DUCKDB=0, every headline query's ORACLE SQL is also
-timed in DuckDB on the same parquet + machine, and the report gains
-"duckdb" (per-query sec), "ratio" (spark/duckdb), and two flag lists:
-"ratio_gt2_substantive" = NEW, UNADJUDICATED >2x queries only (each
-needs a fix or a SCALE.md adjudication next round), and
-"ratio_gt2_adjudicated" = >2x queries this run that are already
-per-name adjudicated in SCALE.md (anchor included). The split (r12,
-VERDICT r11 what's-wrong #1) keeps the substantive list STABLE across
-idle/degraded sessions: the knife-edge band straddles the bar with
-session state, and a consumer reading one artifact must not mistake a
-re-firing of a pre-adjudicated name for a new defect. DuckDB is the
-honest single-node yardstick here: at bench SF an embedded vectorized
-engine with zero scheduling overhead is the fastest thing this machine
-can do, so ratios are an upper bound on Spark's true overhead — the
-distributed design pays off past one node, not against it.
+Unless SPARK_GRAFT_BENCH_DUCKDB=0, every headline query's oracle SQL is
+also timed in DuckDB on the same parquet and machine, and the line gains
+"duckdb_sec" (per-query sec), "duckdb_total_sec" and
+"ratio_spark_over_duckdb". These are information only: DuckDB is the
+single-node yardstick (an embedded vectorized engine with no scheduling
+overhead), so a ratio is an upper bound on Spark's overhead at bench SF,
+not a verdict on a query.
+
+This script only measures. To compare runs, pass the committed artifacts
+of earlier runs and the new one to tools/bench_diff.py:
+
+    python tools/bench_diff.py OLD.json [OLD.json ...] NEW.json
+
+A query regresses when its new wall exceeds 1.5x the largest wall it had
+in any OLD run (its noise envelope) and is over 1 s.
 """
 
 from __future__ import annotations
@@ -202,117 +201,6 @@ HEADLINE = [
 ]
 
 
-# Pre-adjudicated >2x-vs-DuckDB names (r12, VERDICT r11 what's-wrong #1 /
-# task 3): every entry fired (or was pre-registered as knife-edge) under
-# the tighter max(10*floor, 1.0s) bar and carries a per-name adjudication
-# in SCALE.md — "Round-11 bench-band adjudication" unless noted. These are
-# SUBTRACTED from ratio_gt2_substantive so that list means "new,
-# unadjudicated flags only" and cannot change length with session state;
-# when one of these fires it is still reported, with its anchor, under
-# ratio_gt2_adjudicated. Removing a name here re-arms its flag.
-ADJUDICATED_GT2: dict[str, str] = {
-    # the gram/token text family: multi-stage fixed floors at bench SF
-    # (tokenize -> explode -> 1-2 key exchanges -> join-back -> doc fold);
-    # plans individually audited in their landing rounds; r12 adds the
-    # k-replication ratio-convergence measurement ("Round-12 gram/token
-    # band ratio convergence")
-    "exact_substring_dedup": "SCALE.md 'Round-11 bench-band adjudication' + r12 convergence",
-    "exact_substring_stats": "SCALE.md 'Round-11 bench-band adjudication'",
-    "exact_substring_gate": "SCALE.md 'Round-11 bench-band adjudication' + r11 gramgate probe (flat in corpus)",
-    "exact_substring_source_matrix": "SCALE.md 'Round-11 bench-band adjudication' (fixed r11; knife-edge pre-registered)",
-    "stream_substring_gate": "SCALE.md 'Round-11 bench-band adjudication' + r12 stage breakdown + r13 k=16 point (1.67x)",
-    "stream_delta_impact": "SCALE.md 'Round-13 band convergence' — own measured k-series now, 7.3x->1.99x monotone, under the bar by k=8",
-    "decontam_split": "SCALE.md 'Round-11 bench-band adjudication' + r12 convergence",
-    "decontam_overlap": "SCALE.md 'Round-11 bench-band adjudication' + r13 k=16 point (1.52x)",
-    "decontam_scrub": "SCALE.md 'Round-11 bench-band adjudication'",
-    "boilerplate_purge": "SCALE.md 'Round-11 bench-band adjudication'",
-    "unigram_surprisal": "SCALE.md 'Round-13 band convergence' — r12's k=8 plateau was a real plan defect (decimal sum + triple tokenize), FIXED r13; re-planned series falls monotone to 1.98x at k=16",
-    "tfidf_top_terms": "SCALE.md 'Round-11 bench-band adjudication' + r13 k=16 point (2.70x->2.03x, still falling; dfreq-checkpoint A/B measured and rejected)",
-    "exact_substring_delta_report": "same family/shape as exact_substring_dedup minus the join-back (r11 docstring)",
-    "exact_substring_delta_report_incremental": "SCALE.md 'Round-12 incremental delta report' — the REGISTERED fixture's delta is corpus/7, the saturated regime; the O(|delta|) claim is the probe's",
-    # non-family knife-edge names, each with its own paragraph
-    "scd2_asof_lookup": "SCALE.md 'Round-11 bench-band adjudication' (equi-key join is the right plan)",
-    "sql_interface": "SCALE.md 'Round-11 bench-band adjudication' (3 broadcast joins; duck-floor variance)",
-    "snapshot_cdc_diff": "SCALE.md 'Round-11 bench-band adjudication' (knife-edge band)",
-    "dsir_importance": "SCALE.md 'Round-13 band convergence' — micro-nat long sum r13; k-series 2.89x->0.97x, below DuckDB by k=16",
-    # slow-session entrants: 0.7-0.9s idle walls that cross the 1.0s term
-    # only under load — named and adjudicated in SCALE.md's r11
-    # post-change re-bench note (audited shapes, same adjudication class)
-    "passage_dedup": "SCALE.md r11 post-change re-bench note (slow-session entrant)",
-    "centroid_classify": "SCALE.md r11 post-change re-bench note (slow-session entrant)",
-    "quality_classifier_score": "SCALE.md r11 post-change re-bench note (slow-session entrant)",
-    # r13 third-session knife-edge pre-registrations: stable walls, flags
-    # armed once each by flag-TERM noise (load-inflated wall / one slow
-    # DuckDB window) — "Round-13 third-session knife-edge pre-registrations"
-    "bm25_rank": "SCALE.md 'Round-13 third-session knife-edge pre-registrations' (slow-session entrant; 0.81-0.97s idle wall, ratio ~3x permanent)",
-    "nation_pagerank": "SCALE.md 'Round-14 nation_pagerank knife-edge' — duck twin 0.08-0.14s calm (below the duck>=0.25 flag term), crossed 0.25 once in five committed runs; spark wall 1.3-2.0s = fact-join edge build + iteration floor, r14 removed the in-loop broadcasts",
-    "sessionization_stream": "SCALE.md 'Round-14 sessionization_stream re-measurement' — r13's 'floor 1.06-1.38s' anchor did NOT match the driver's 4.64s@32; r14 re-measured on the same machine: 1.0s in full bench context, 1.6s standalone at 32 cores, NORMAL 8->32 scaling (3.1s -> 1.6s); the driver reading is a load artifact, and the band below re-arms the flag if it recurs beyond noise",
-}
-
-# r14 (ADVICE r13): an unconditional name-based waiver would hide a
-# GENUINE future regression in an adjudicated query (a 3x ratio drifting
-# to 8x would only ever appear in the adjudicated bucket). Each entry
-# records the (spark/duckdb ratio, spark wall seconds) envelope it was
-# granted under — the per-name MAXIMA across the four committed
-# measurement artifacts (BENCH_r13 driver run, BENCH_SELF_r14_baseline,
-# and the two r14 post-opt runs), i.e. the observed single-run noise
-# envelope of this bench methodology (per-query min-of-2 walls swing up
-# to ~2x run-to-run on identical code; DuckDB twins swing similarly). A
-# fired name re-arms into ratio_gt2_substantive only when BOTH terms
-# blow: measured ratio > REARM_FACTOR x band ratio AND spark wall >
-# REARM_WALL_FACTOR x band wall — the conjunction is what keeps a calm
-# spark wall under a noisy duck twin (or vice versa) from false-arming,
-# while a real plan regression moves both together. The bands + factors
-# feed the allowlist content hash.
-REARM_FACTOR = 1.5
-REARM_WALL_FACTOR = 1.3
-ADJUDICATED_BAND: dict[str, tuple[float, float]] = {
-    "bm25_rank": (4.4, 1.0),
-    "boilerplate_purge": (5.8, 1.6),
-    "centroid_classify": (7.1, 1.2),
-    "decontam_overlap": (2.4, 1.3),
-    "decontam_scrub": (1.9, 1.1),
-    "decontam_split": (2.5, 1.3),
-    "dsir_importance": (3.6, 1.3),
-    "exact_substring_dedup": (4.2, 2.1),
-    "exact_substring_delta_report": (4.6, 1.6),
-    "exact_substring_delta_report_incremental": (7.4, 2.3),
-    "exact_substring_gate": (6.3, 2.0),
-    "exact_substring_source_matrix": (4.9, 1.5),
-    "exact_substring_stats": (4.0, 1.9),
-    "passage_dedup": (4.1, 1.3),
-    "quality_classifier_score": (4.2, 0.8),
-    "nation_pagerank": (5.2, 2.0),
-    "scd2_asof_lookup": (4.8, 1.6),
-    # r14 re-anchor: this round's own measurements only (1.0-2.0 s
-    # in-bench walls over a 0.13-0.24 s duck twin); the driver's one-off
-    # (19.4, 4.6) reading is deliberately NOT grandfathered into the
-    # band — if it recurs, both terms blow and the flag re-arms
-    "sessionization_stream": (8.0, 2.2),
-    "snapshot_cdc_diff": (23.9, 1.3),
-    "sql_interface": (15.2, 1.8),
-    "stream_delta_impact": (13.0, 4.1),
-    "stream_substring_gate": (9.8, 4.2),
-    "tfidf_top_terms": (4.5, 1.2),
-    "unigram_surprisal": (5.5, 1.7),
-}
-
-
-def adjudication_allowlist_hash() -> str:
-    """Content hash of ADJUDICATED_GT2 (names AND anchors, sorted) plus
-    the r14 re-arm bands — stamped into every bench artifact (r13,
-    VERDICT r12 what's-wrong #2) so a consumer can tell WHICH allowlist
-    version a committed flag split was computed against without
-    consulting git history."""
-    import hashlib
-
-    blob = json.dumps(
-        [sorted(ADJUDICATED_GT2.items()), sorted(ADJUDICATED_BAND.items()),
-         REARM_FACTOR, REARM_WALL_FACTOR]
-    ).encode()
-    return hashlib.sha256(blob).hexdigest()[:16]
-
-
 def materialize_multifile(spark, sf_dir: str, n_files: int = 32) -> str:
     """Rewrite the driver's single-row-group-per-table parquet into an
     n-file layout per table — the shape production tables actually have,
@@ -461,26 +349,6 @@ def main() -> None:
             for n in timings
             if n in duck and duck[n] > 0
         }
-        # Spark's fixed per-query floor (scheduling + noop commit on an
-        # empty plan, min of 5 — a single sample swings 0.1-0.35s with
-        # machine state): at bench SF most queries cost milliseconds of
-        # actual work, so a raw spark/duckdb ratio on a sub-floor query
-        # measures harness overhead, not the plan. Ratios are reported
-        # for everything; the >2x list that demands a fix/justification
-        # is restricted to comparisons where BOTH engines do measurable
-        # work — Spark >= max(10x floor, 1s) (the plan, not the floor)
-        # AND DuckDB >= 0.25s (the workload exists at this SF at all).
-        # r11 (VERDICT r10 What's-wrong #2): the wall term dropped from
-        # 2.0s to 1.0s so the 1-2s band is policed; every query the
-        # tighter bar first flagged was either fixed or adjudicated in
-        # SCALE.md (r11 bench adjudication section).
-        floor = float("inf")
-        for _ in range(5):
-            t0 = time.time()
-            spark.range(1).write.format("noop").mode("overwrite").save()
-            floor = min(floor, time.time() - t0)
-        floor = round(floor, 3)
-        cutoff = max(10 * floor, 1.0)
         # dict keys carry units explicitly: a truncated capture of this
         # line once read the per-query RATIO dict as wall-seconds
         # (r4 verdict, "stream_dedup: 191" was a ratio) — "queries" above
@@ -488,54 +356,6 @@ def main() -> None:
         out["duckdb_sec"] = duck
         out["duckdb_total_sec"] = round(sum(duck.values()), 3)
         out["ratio_spark_over_duckdb"] = ratio
-        out["spark_floor_sec"] = floor
-        fired = sorted(
-            (
-                n
-                for n, r in ratio.items()
-                if r > 2.0 and timings[n] >= cutoff and duck[n] >= 0.25
-            ),
-            key=lambda n: -ratio[n],
-        )
-        # substantive = NEW, unadjudicated flags only (stable across
-        # idle/degraded sessions); adjudicated re-firings are reported
-        # separately with their SCALE.md anchors — see ADJUDICATED_GT2.
-        # r14 (ADVICE r13): an adjudicated name whose measured ratio
-        # blows past REARM_FACTOR x its granted band is a NEW defect the
-        # old adjudication cannot cover — it RE-ARMS into substantive
-        # (and is detailed under ratio_gt2_rearmed).
-        rearmed = {
-            n: {
-                "anchor": ADJUDICATED_GT2[n],
-                "band": ADJUDICATED_BAND.get(n),
-                "measured_ratio": ratio[n],
-                "measured_wall": timings[n],
-            }
-            for n in fired
-            if n in ADJUDICATED_GT2
-            and ratio[n]
-            > REARM_FACTOR * ADJUDICATED_BAND.get(n, (float("inf"), 0))[0]
-            and timings[n]
-            > REARM_WALL_FACTOR * ADJUDICATED_BAND.get(n, (0, float("inf")))[1]
-        }
-        out["ratio_gt2_substantive"] = [
-            n for n in fired if n not in ADJUDICATED_GT2 or n in rearmed
-        ]
-        out["ratio_gt2_adjudicated"] = {
-            n: ADJUDICATED_GT2[n]
-            for n in fired
-            if n in ADJUDICATED_GT2 and n not in rearmed
-        }
-        out["ratio_gt2_rearmed"] = rearmed
-        # r13 (VERDICT r12 what's-wrong #2): stamp the artifact with the
-        # allowlist it was computed against, so the substantive/
-        # adjudicated split is reproducible from the artifact ALONE — an
-        # allowlist extended after an artifact was committed (the
-        # r12-underload discrepancy) is now visible as a hash mismatch
-        # instead of a silent contradiction; tools/bench_diff.py warns
-        # when two compared artifacts disagree
-        out["adjudication_allowlist_sha256"] = adjudication_allowlist_hash()
-        out["adjudication_allowlist_names"] = sorted(ADJUDICATED_GT2)
     print(json.dumps(out), flush=True)
     # Belt-and-braces durability (r14, VERDICT r13 task 8): r12's
     # round-over-round PERF diff was lost because the driver's capture of

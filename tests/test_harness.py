@@ -9,16 +9,16 @@ import numpy as np
 import pandas as pd
 
 
-def _load_check_oracle():
-    p = Path(__file__).resolve().parent.parent / "tools" / "check_oracle.py"
-    spec = importlib.util.spec_from_file_location("check_oracle", p)
+def _load_tool(name):
+    p = Path(__file__).resolve().parent.parent / "tools" / f"{name}.py"
+    spec = importlib.util.spec_from_file_location(name, p)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
 def test_canon_handles_array_and_null_cells():
-    canon = _load_check_oracle().canon
+    canon = _load_tool("check_oracle").canon
     df = pd.DataFrame(
         {
             "a": [[1, 2], None, [3]],
@@ -32,7 +32,7 @@ def test_canon_handles_array_and_null_cells():
 
 
 def test_canon_distinguishes_null_from_empty_string():
-    canon = _load_check_oracle().canon
+    canon = _load_tool("check_oracle").canon
     df = pd.DataFrame({"a": ["", None]})
     out = canon(df)
     assert set(out["a"]) == {"", "<NULL>"}
@@ -169,81 +169,52 @@ def test_driver_window_fully_resolvable():
     assert list(osql)[: len(window_with_oracle)] == window_with_oracle
 
 
-def test_bench_artifact_allowlist_stamp_and_diff_warning():
-    """r13 (VERDICT r12 what's-wrong #2): bench artifacts are stamped
-    with the adjudication-allowlist content hash so the substantive/
-    adjudicated split is reproducible from the artifact alone, and
-    bench_diff warns when two artifacts were computed against different
-    allowlist versions (the r12-underload discrepancy class)."""
-    import importlib.util
+def test_bench_diff_envelope_rule_on_committed_r14_runs():
+    """bench_diff's one regression rule over the four committed r14 bench
+    artifacts: each NEW run is compared against the per-query maximum
+    (the noise envelope) of the other three. Two of them wrap the bench
+    line under "parsed". The rule stays quiet on the two calm runs, names
+    the five queries the loaded 32-core driver run slowed past 1.5x, and
+    catches a planted 3x regression."""
+    import json
 
-    import bench
-
-    h = bench.adjudication_allowlist_hash()
-    assert h == bench.adjudication_allowlist_hash()  # deterministic
-    assert len(h) == 16
-    # the hash covers anchors too, not just names: editing an anchor
-    # (a re-adjudication) must change the stamp
-    orig = dict(bench.ADJUDICATED_GT2)
-    try:
-        k = next(iter(bench.ADJUDICATED_GT2))
-        bench.ADJUDICATED_GT2[k] = "edited anchor"
-        assert bench.adjudication_allowlist_hash() != h
-    finally:
-        bench.ADJUDICATED_GT2.clear()
-        bench.ADJUDICATED_GT2.update(orig)
-
-    p = Path(__file__).resolve().parent.parent / "tools" / "bench_diff.py"
-    spec = importlib.util.spec_from_file_location("bench_diff", p)
-    bd = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bd)
-    a = {"queries": {"q": 1.0}, "adjudication_allowlist_sha256": h}
-    b = {"queries": {"q": 1.0}, "adjudication_allowlist_sha256": h}
-    assert "allowlist_mismatch_warning" not in bd.diff(a, b)
-    b["adjudication_allowlist_sha256"] = "different"
-    assert "allowlist_mismatch_warning" in bd.diff(a, b)
-    # an artifact predating the stamp (no field) also warns
-    del a["adjudication_allowlist_sha256"]
-    b["adjudication_allowlist_sha256"] = h
-    assert "allowlist_mismatch_warning" in bd.diff(a, b)
-
-
-def test_adjudication_rearm_band():
-    """r14 (ADVICE r13): every adjudicated name carries the ratio band it
-    was granted under, the band feeds the allowlist hash, and the re-arm
-    predicate promotes a blown band back to substantive."""
-    import bench
-
-    # every allowlisted name is banded (no unconditional waivers left)
-    assert set(bench.ADJUDICATED_BAND) == set(bench.ADJUDICATED_GT2)
-    assert all(r > 0 and w > 0 for r, w in bench.ADJUDICATED_BAND.values())
-
-    h = bench.adjudication_allowlist_hash()
-    orig = dict(bench.ADJUDICATED_BAND)
-    try:
-        k = next(iter(bench.ADJUDICATED_BAND))
-        r, w = orig[k]
-        bench.ADJUDICATED_BAND[k] = (r * 2, w)
-        assert bench.adjudication_allowlist_hash() != h  # bands are content
-    finally:
-        bench.ADJUDICATED_BAND.clear()
-        bench.ADJUDICATED_BAND.update(orig)
-
-    # the re-arm predicate (mirrors bench.main's conjunction): only a
-    # SIMULTANEOUS ratio + wall blowout re-arms — one-sided noise does not
-    def rearms(name, ratio, wall):
-        br, bw = bench.ADJUDICATED_BAND[name]
-        return (
-            ratio > bench.REARM_FACTOR * br
-            and wall > bench.REARM_WALL_FACTOR * bw
+    bd = _load_tool("bench_diff")
+    root = Path(__file__).resolve().parent.parent
+    runs = {
+        name: json.loads((root / f"{name}.json").read_text())
+        for name in (
+            "BENCH_SELF_r14",
+            "BENCH_SELF_r14_baseline",
+            "BENCH_r14",
+            "BENCH_r14_c8",
         )
+    }
 
-    br, bw = bench.ADJUDICATED_BAND["sessionization_stream"]
-    assert rearms("sessionization_stream", 19.4, 4.6)  # the driver outlier
-    assert not rearms("sessionization_stream", 19.4, bw)  # duck-noise only
-    assert not rearms("sessionization_stream", br, 4.6)  # wall-noise only
-    # unigram's observed single-run noise point (5.54, 1.74) must NOT arm
-    assert not rearms("unigram_surprisal", 5.54, 1.74)
+    def regressed(new_name, new=None):
+        olds = [run for name, run in runs.items() if name != new_name]
+        return set(bd.diff(olds, new or runs[new_name])["regressed"])
+
+    assert regressed("BENCH_SELF_r14") == set()
+    assert regressed("BENCH_r14_c8") == set()
+    assert regressed("BENCH_r14") == {
+        "bloom_semi_join",
+        "fts_vocab",
+        "kmv_set_algebra",
+        "semantic_dedup",
+        "stream_static_join",
+    }
+    planted = json.loads(json.dumps(runs["BENCH_SELF_r14"]))
+    planted["queries"]["pricing_summary"] *= 3
+    assert regressed("BENCH_SELF_r14", planted) == {"pricing_summary"}
+
+    # one OLD artifact: the envelope is that run's own walls
+    a = {"queries": {"q": 1.0, "r": 0.2, "s": 3.0}}
+    b = {"parsed": {"queries": {"q": 1.6, "r": 0.9, "s": 1.0}}}
+    out = bd.diff(a, b)
+    assert out == bd.diff([a], b)
+    assert out["regressed"] == {"q": [1.0, 1.6, 1.6]}
+    assert out["improved"] == {"s": [3.0, 1.0, 0.33]}
+    assert out["noise_n"] == 1
 
 
 def test_every_package_function_has_a_caller():

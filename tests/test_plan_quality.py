@@ -413,7 +413,7 @@ def test_no_pinned_broadcast_of_fact_scaled_tables(spark):
     (customer/supplier/orders/lineitem/part/events/documents/embeddings)
     unless the subtree bounds it to a constant size (an Aggregate node —
     1-row anchors, vocab LMs, per-label centroids — or a Limit) or the
-    query carries a documented allowlist justification."""
+    query carries a documented exemption."""
     import re
 
     # signature columns that identify an sf-proportional base relation

@@ -1,24 +1,29 @@
-"""Noise-aware diff of two bench artifacts (the regression instrument the
-r6->r7 `boilerplate_purge` adjudication was missing: a cross-run
-CacheManager artifact burned a round because nothing compared artifacts
-structurally).
+"""Noise-aware diff of bench artifacts: the one regression rule for
+``bench.py`` runs.
 
-Classifies each common query:
+Each query's OLD wall is its maximum over the OLD artifacts: the query's
+own noise envelope, as wide as the committed runs have shown it to be.
+Each query common to OLD and NEW is then classified:
 
-- ``regressed``  — new/old > ratio_floor AND new wall > abs_floor AND the
-  delta exceeds the sub-second noise class (both walls matter: a 0.2 s ->
-  0.5 s swing is machine state, not a plan change);
-- ``improved``   — the same test in the other direction;
-- ``noise``      — everything else.
+- ``regressed``: new/old > RATIO_FLOOR and new wall > ABS_FLOOR_S (both
+  walls matter: a 0.2 s -> 0.5 s swing is machine state, not a plan
+  change);
+- ``improved``: the same test in the other direction;
+- ``noise``: everything else.
 
-Per the r7 adjudication protocol, a `regressed` row is a PROMPT to re-time
-interleaved on an idle machine (min-of-N, both shapes in one session),
-never a verdict by itself — single-JVM bench runs swing 2-5x on sub-3 s
-queries with zero plan changes (measured r7: pq_topk 1.15->2.59 s,
-semantic_dedup 1.44->2.81 s, both noise).
+A `regressed` row is a prompt to re-time interleaved on an idle machine
+(min-of-N, both shapes in one session), not a verdict by itself:
+single-JVM bench runs swing 2-5x on sub-3 s queries with no plan change
+(measured: pq_topk 1.15->2.59 s, semantic_dedup 1.44->2.81 s, both
+noise). Passing several OLD runs widens the envelope to cover that
+swing.
 
-Usage: python tools/bench_diff.py OLD.json NEW.json [ratio_floor] [abs_floor_s]
-Exit code 0 always (informational); prints one JSON line.
+An artifact is either the bench's stdout line or a capture that wraps it
+under ``"parsed"``.
+
+Usage: python tools/bench_diff.py OLD.json [OLD.json ...] NEW.json
+Prints one JSON line and exits 0 (informational); given fewer than two
+files, prints this text and exits 1.
 """
 
 from __future__ import annotations
@@ -26,18 +31,28 @@ from __future__ import annotations
 import json
 import sys
 
+RATIO_FLOOR = 1.5
+ABS_FLOOR_S = 1.0
 
-def diff(
-    old: dict, new: dict, ratio_floor: float = 1.5, abs_floor: float = 1.0
-) -> dict:
-    qo, qn = old["queries"], new["queries"]
+
+def _queries(artifact: dict) -> dict[str, float]:
+    return artifact.get("parsed", artifact)["queries"]
+
+
+def diff(old: dict | list[dict], new: dict) -> dict:
+    olds = [_queries(o) for o in (old if isinstance(old, list) else [old])]
+    qn = _queries(new)
+    qo: dict[str, float] = {}
+    for q in olds:
+        for name, sec in q.items():
+            qo[name] = max(sec, qo.get(name, sec))
     common = sorted(set(qo) & set(qn))
     out = {"regressed": {}, "improved": {}, "noise_n": 0}
     for name in common:
         a, b = qo[name], qn[name]
-        if b > abs_floor and a > 0 and b / a > ratio_floor:
+        if b > ABS_FLOOR_S and a > 0 and b / a > RATIO_FLOOR:
             out["regressed"][name] = [a, b, round(b / a, 2)]
-        elif a > abs_floor and b > 0 and a / b > ratio_floor:
+        elif a > ABS_FLOOR_S and b > 0 and a / b > RATIO_FLOOR:
             out["improved"][name] = [a, b, round(b / a, 2)]
         else:
             out["noise_n"] += 1
@@ -46,32 +61,14 @@ def diff(
     out["only_new"] = sorted(set(qn) - set(qo))
     out["total_old_s"] = round(sum(qo[n] for n in common), 1)
     out["total_new_s"] = round(sum(qn[n] for n in common), 1)
-    for side in ("old", "new"):
-        d = old if side == "old" else new
-        out[f"substantive_{side}"] = d.get("ratio_gt2_substantive")
-    # r13 (VERDICT r12 what's-wrong #2): the substantive/adjudicated
-    # split is only comparable when both artifacts were computed against
-    # the SAME adjudication allowlist — artifacts now carry its content
-    # hash (bench.adjudication_allowlist_hash); warn on any mismatch
-    # (including one side predating the stamp) so a flag appearing or
-    # vanishing across an allowlist edit is never read as a plan change
-    ho = old.get("adjudication_allowlist_sha256")
-    hn = new.get("adjudication_allowlist_sha256")
-    if ho != hn:
-        out["allowlist_mismatch_warning"] = (
-            f"artifacts computed against different adjudication "
-            f"allowlists (old={ho}, new={hn}); their substantive-flag "
-            "lists are not directly comparable"
-        )
     return out
 
 
 def main() -> None:
-    old = json.load(open(sys.argv[1]))
-    new = json.load(open(sys.argv[2]))
-    rf = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-    af = float(sys.argv[4]) if len(sys.argv) > 4 else 1.0
-    print(json.dumps(diff(old, new, rf, af)))
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    *olds, new = [json.load(open(p)) for p in sys.argv[1:]]
+    print(json.dumps(diff(olds, new)))
 
 
 if __name__ == "__main__":

@@ -110,7 +110,7 @@ def main() -> int:
         if sql is None:
             # rows-only queries run on inputs that guarantee output
             # (planted duplicates, k-row top-k): 0 rows IS a regression,
-            # not a warning — except the allowlisted probe-miss case
+            # not a warning — except the exempt probe-miss case
             if len(spark_df) == 0 and name not in ("embedding_lsh_topk",):
                 failures.append((name, "0 rows from a rows-only query"))
                 print(f"FAIL {name}: 0 rows from a rows-only query")

@@ -48,6 +48,10 @@ def agency_stats(silver: DataFrame, today: str) -> DataFrame:
     def in_win(days: int) -> Column:
         return req >= F.date_sub(anchor, days)
 
+    def avg_when(cond: Column | None) -> Column:
+        v = resp_days if cond is None else F.when(cond, resp_days)
+        return F.sum(v).cast("double") / F.count(v)
+
     grouped = silver.groupBy("agency_slug", "agency_canonical")
     metrics = grouped.agg(
         F.count("*").alias("requests"),
@@ -56,19 +60,8 @@ def agency_stats(silver: DataFrame, today: str) -> DataFrame:
         F.count(F.when(in_win(365), 1)).alias("requests_365d"),
         F.count(resp_days).alias("responded"),
         F.sum(resp_days).cast("long").alias("response_days_sum"),
-        # 365d partials stored alongside (A8's (sum, count) form) so gold
-        # can be maintained incrementally from append-only sync deltas
-        F.count(F.when(in_win(365), resp_days)).alias("responded_365d"),
-        F.sum(F.when(in_win(365), resp_days)).cast("long").alias(
-            "response_days_sum_365d"
-        ),
-        (F.sum(resp_days).cast("double") / F.count(resp_days)).alias(
-            "avg_response_days"
-        ),
-        (
-            F.sum(F.when(in_win(365), resp_days)).cast("double")
-            / F.count(F.when(in_win(365), resp_days))
-        ).alias("avg_response_days_365d"),
+        avg_when(None).alias("avg_response_days"),
+        avg_when(in_win(365)).alias("avg_response_days_365d"),
     )
     # A9's per-slug resolution counts folded into a map (the reference's
     # ``resolutions: Record<string, number>``; raw values are mixed-case,

@@ -49,10 +49,12 @@ A larger generation keeps the scan's own split and its parallelism.
 Scale notes: each gold table is one narrow aggregate over silver; at
 100 TB you would (a) partition silver by request_year and z-order/sort by
 (agency_slug, id) for pruning, (b) maintain agency_stats and home_stats
-from the sync delta instead of full recompute (their counts and sums are
-decomposable; ``plans.incremental.merge_agency_stats`` is the agency_stats
-merge), (c) store bronze/silver as Delta/Iceberg for real MERGE + time
-travel.
+from the sync delta instead of full recompute: their lifetime counts and
+sums are decomposable (``plans.incremental.merge_partial_stats``), while
+the 30/90/365-day windowed columns move with ``today`` and would be
+re-derived over the recent slice (not implemented: each sync that adds
+rows rebuilds both golds), (c) store bronze/silver as Delta/Iceberg for
+real MERGE + time travel.
 """
 
 from __future__ import annotations
@@ -208,11 +210,9 @@ class MedallionPipeline:
         home_stats) from bronze: the reference's 'recompute everything the
         caches held' moment.
 
-        Full recompute is always correct; for append-only sync deltas
-        agency_stats could instead be merged from a delta-only aggregate
-        via plans.incremental.merge_agency_stats (equivalence proven in
-        tests/test_incremental.py). Fall back to this full rebuild
-        whenever corrections/dimensions change existing rows."""
+        Full recompute is always correct, and it is the only path:
+        every sync that adds rows calls it (scale note (b) in the module
+        docstring)."""
         from pyspark.sql import Observation
         import pyspark.sql.functions as F
 

@@ -2593,7 +2593,7 @@ def pmi_collocations(
     raw corpus passes 4 -> 2 at the cost of one tiny materialization —
     flipped automatically once the on-disk corpus crosses the measured
     recompute/persist crossover (r14: sources.tables.persist_multi_pass,
-    threshold SPARK_GRAFT_PERSIST_PASSES_MIN_BYTES; both settings are
+    threshold PERSIST_PASSES_MIN_BYTES; both settings are
     hash-identical, so the flip can never change results)."""
     from ..sources.tables import persist_multi_pass
 

@@ -55,11 +55,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # recompute wins every in-bench A/B (materialization adds job
 # boundaries), by ~6 MB (k=10) persist edges ahead, and at ~58 MB (k=100)
 # persist wins 1.6x (28.7 s -> 18.1 s). 4 MiB sits just under the
-# measured flip point; production deployments override via
-# SPARK_GRAFT_PERSIST_PASSES_MIN_BYTES.
-PERSIST_PASSES_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PERSIST_PASSES_MIN_BYTES", str(4 * 1024 * 1024))
-)
+# measured flip point.
+PERSIST_PASSES_MIN_BYTES = 4 * 1024 * 1024
 
 
 # Session confs that change the schema parquet inference returns.

@@ -21,6 +21,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.utils import AnalysisException
 
 from ..operators import segments
@@ -285,6 +286,23 @@ def events_stream_flushed(
     return read_events_stream(spark, out)
 
 
+def _await_available_now(
+    spark: SparkSession, writer: DataStreamWriter, confs: dict[str, str]
+) -> None:
+    """Start ``writer`` with an availableNow trigger and block until the
+    stream has drained its input, with ``confs`` set on the session for
+    the stream's lifetime and restored afterwards, so batch plans run
+    after it see the confs they had before."""
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def _run_available_now(
     stream_df: DataFrame,
     query_name: str,
@@ -325,25 +343,18 @@ def _run_available_now(
     long-running production query keeps the default regardless, since
     there eviction is what bounds state."""
     spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old_ndb = spark.conf.get(ndb_key, "true")
+    confs = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
     if not no_data_batches:
-        spark.conf.set(ndb_key, "false")
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set(ndb_key, old_ndb)
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    _await_available_now(
+        spark,
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode),
+        confs,
+    )
     return spark.table(query_name)
 
 
@@ -1229,21 +1240,15 @@ def stream_upsert_sink(
         os.rename(tmp, table_path)
         shutil.rmtree(old, ignore_errors=True)
 
-    spark = stream_df.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(merge_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _await_available_now(
+        stream_df.sparkSession,
+        stream_df.writeStream.foreachBatch(merge_batch)
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_path),
+        {}
+        if state_partitions is None
+        else {"spark.sql.shuffle.partitions": str(state_partitions)},
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1415,11 +1420,7 @@ def streaming_substring_gate(
             )
         out.write.mode("overwrite").parquet(f"{sink_path}/batch={epoch_id}")
 
-    writer = (
-        incoming.writeStream.foreachBatch(gate)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
+    writer = incoming.writeStream.foreachBatch(gate).queryName(query_name)
     if checkpoint_path is not None:
         writer = writer.option("checkpointLocation", checkpoint_path)
     # scope shuffle partitions to batch volume around the stream's
@@ -1427,13 +1428,9 @@ def streaming_substring_gate(
     # several shuffles (probe distinct, hits aggregate, sink write) on
     # shard-sized data, and 32-way exchanges on a few-hundred-doc batch
     # are pure task-scheduling overhead
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = writer.start()
-        q.awaitTermination()
+        _await_available_now(spark, writer, {"spark.sql.shuffle.partitions": "8"})
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         live_close()  # the stream owns its snapshots
     run_schema = T.StructType(
         [
@@ -1532,20 +1529,10 @@ def streaming_delta_impact(
         )
         report.write.mode("overwrite").parquet(f"{sink_path}/batch={epoch_id}")
 
-    writer = (
-        incoming.writeStream.foreachBatch(impact)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
+    writer = incoming.writeStream.foreachBatch(impact).queryName(query_name)
     if checkpoint_path is not None:
         writer = writer.option("checkpointLocation", checkpoint_path)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _await_available_now(spark, writer, {"spark.sql.shuffle.partitions": "8"})
     # the report's id is ALWAYS BIGINT — unlike the gate (whose runs
     # carry the incoming dtype through, the r9 int32 lesson), the
     # report's ids round-trip the 21-bit packing (shiftright on the
