@@ -233,8 +233,8 @@ def test_compact_ann_index_equivalent_and_resets(spark, tmp_path):
         }
 
     assert raw(inc_dir) == raw(fresh_dir)
-    with open(os.path.join(inc_dir, ann_index.STATS_FILE)) as f:
-        assert json.load(f)[ann_index._MAX_SEG_KEY] == 0
+    with open(os.path.join(inc_dir, ann_index.MANIFEST)) as f:
+        assert json.load(f)["max_seg"] == 0
     assert any(
         d.startswith("ivf_cell=") for d in os.listdir(inc_dir)
     )

@@ -113,101 +113,3 @@ def test_publish_prunes_stale_generations(tmp_path, monkeypatch):
     derived._prune_stale_generations(new)
     assert not os.path.exists(old)
     assert os.path.exists(new)
-
-
-def test_prune_aside_dirs_follow_their_base_lineage(tmp_path, monkeypatch):
-    """Publish-aside compaction dirs (<base>._rs_g<gen>_c<seg>, from
-    operators/segments.compact_aside) interact with generation pruning
-    asymmetrically (r12, ADVICE r11): an aside dir of a SUPERSEDED
-    source fingerprint is pruned along with its base (it can never be
-    re-resolved), while an aside dir of the LIVE base is never
-    stem-pruned by a later publish — the caller may have adopted it as
-    its index and be appending to it (single-writer per lineage)."""
-    monkeypatch.setattr(derived, "_PREFIX", str(tmp_path) + "/spark_graft_")
-    old = str(tmp_path / "spark_graft_kind_src_oldfp1")
-    old_aside = old + "._rs_g0_c2"
-    old_aside_nested = old_aside + "._rs_g1_c1"
-    new = str(tmp_path / "spark_graft_kind_src_newfp2")
-    new_aside_adopted = new + "._rs_g0_c2"
-    new_aside_later = new + "._rs_g1_c3"
-    for d in (old, old_aside, old_aside_nested, new, new_aside_adopted,
-              new_aside_later):
-        os.makedirs(d)
-    _touch(os.path.join(new, "_SUCCESS"), b"")
-    stale = time.time() - derived._PRUNE_TTL_SECONDS - 60
-    for d in (old, old_aside, old_aside_nested, new_aside_adopted):
-        os.utime(d, (stale, stale))
-
-    derived._prune_stale_generations(new)
-    # superseded lineage gone: base AND its aside chain (nested too)
-    assert not os.path.exists(old)
-    assert not os.path.exists(old_aside)
-    assert not os.path.exists(old_aside_nested)
-    # live lineage intact: the adopted aside dir is PAST the TTL and
-    # still survives — only its caller retires it
-    assert os.path.exists(new)
-    assert os.path.exists(new_aside_adopted)
-    assert os.path.exists(new_aside_later)
-
-
-def test_prune_ttl_gates_each_aside_dir_individually(tmp_path, monkeypatch):
-    """A freshly-compacted aside dir of a superseded base survives the
-    base's pruning until ITS OWN mtime exceeds the TTL (readers of the
-    old tree may have just re-resolved to it)."""
-    monkeypatch.setattr(derived, "_PREFIX", str(tmp_path) + "/spark_graft_")
-    old = str(tmp_path / "spark_graft_kind_src_oldfp1")
-    old_aside_fresh = old + "._rs_g0_c2"
-    new = str(tmp_path / "spark_graft_kind_src_newfp2")
-    for d in (old, old_aside_fresh, new):
-        os.makedirs(d)
-    _touch(os.path.join(new, "_SUCCESS"), b"")
-    stale = time.time() - derived._PRUNE_TTL_SECONDS - 60
-    os.utime(old, (stale, stale))  # base expired; aside still fresh
-
-    derived._prune_stale_generations(new)
-    assert not os.path.exists(old)
-    assert os.path.exists(old_aside_fresh)  # inside its own TTL window
-
-
-def test_prune_orphaned_aside_dirs_once_expired(tmp_path, monkeypatch):
-    """r13 (ADVICE r12): the individually-TTL-gated aside dir from the
-    test above used to leak FOREVER — once its base generation was
-    pruned, later sweeps never reached the base-lineage block again
-    ('._rs_' names are skipped by the stem loop, and the base is gone
-    from siblings). The orphan sweep closes it: an aside whose root
-    base matches the stem pattern but no longer exists on disk is
-    pruned as soon as its own TTL lapses — while asides of the LIVE
-    base remain caller-owned and untouched at any age."""
-    monkeypatch.setattr(derived, "_PREFIX", str(tmp_path) + "/spark_graft_")
-    old = str(tmp_path / "spark_graft_kind_src_oldfp1")
-    orphan = old + "._rs_g0_c2"
-    orphan_nested = orphan + "._rs_g1_c1"
-    new = str(tmp_path / "spark_graft_kind_src_newfp2")
-    live_aside = new + "._rs_g0_c2"
-    # base already pruned in an earlier sweep: only the asides remain
-    for d in (orphan, orphan_nested, new, live_aside):
-        os.makedirs(d)
-    _touch(os.path.join(new, "_SUCCESS"), b"")
-
-    # fresh orphans survive (their own reader-safety TTL window)
-    derived._prune_stale_generations(new)
-    assert os.path.exists(orphan)
-    assert os.path.exists(orphan_nested)
-
-    stale = time.time() - derived._PRUNE_TTL_SECONDS - 60
-    for d in (orphan, orphan_nested, live_aside):
-        os.utime(d, (stale, stale))
-    derived._prune_stale_generations(new)
-    # expired orphans gone (nested chain included — its root is the
-    # same vanished base)
-    assert not os.path.exists(orphan)
-    assert not os.path.exists(orphan_nested)
-    # the LIVE base's aside survives at ANY age: caller-owned lineage
-    assert os.path.exists(live_aside)
-    # an unrelated artifact's orphan aside is never touched by THIS
-    # artifact's sweep (stem scoping)
-    foreign = str(tmp_path / "spark_graft_other_src_fp9") + "._rs_g0_c1"
-    os.makedirs(foreign)
-    os.utime(foreign, (stale, stale))
-    derived._prune_stale_generations(new)
-    assert os.path.exists(foreign)

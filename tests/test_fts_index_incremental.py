@@ -134,32 +134,3 @@ def test_streaming_maintenance_matches_rebuild(spark, tmp_path):
     )
     assert _index_rows(spark, d) == _rebuilt_rows(spark, final)
     assert ("query", 2) not in _index_rows(spark, d)  # update superseded
-
-
-def test_reader_safe_compaction_fts(spark, tmp_path):
-    """r11 (segments.compact_aside, wired into all four indexes): the
-    publish-aside mode on the FTS index — a load planned against the
-    old tree still collects after the compaction, the returned NEW
-    path serves the identical live posting set single-segment, and the
-    (gen, committed)-keyed naming makes re-runs idempotent and
-    post-append re-runs fresh."""
-    d = str(tmp_path / "idx")
-    fts_index.build_fts_index(_docs(spark, [(1, "alpha beta"), (2, "gamma")]), d)
-    fts_index.upsert_fts_index(_docs(spark, [(1, "delta beta")]), d)
-
-    expected = _index_rows(spark, d)
-    planned = fts_index.load_fts_index(spark, d)  # NOT yet collected
-    new_path = fts_index.compact_fts_index(spark, d, reader_safe=True)
-    assert new_path != d
-    assert os.path.exists(os.path.join(d, fts_index.MANIFEST))
-    assert {(r["token"], r["id"]) for r in planned.collect()} == expected
-    assert _index_rows(spark, new_path) == expected
-    man = fts_index.segments.read_manifest(new_path, fts_index.MANIFEST)
-    assert man["max_seg"] == 0 and man["gen"] == 1
-    assert fts_index.dead_fraction(spark, new_path) == 0.0
-    # idempotent without new appends; fresh dir after an append
-    assert fts_index.compact_fts_index(spark, d, reader_safe=True) == new_path
-    fts_index.upsert_fts_index(_docs(spark, [(9, "zeta")]), d)
-    newer = fts_index.compact_fts_index(spark, d, reader_safe=True)
-    assert newer not in (new_path, d)
-    assert ("zeta", 9) in _index_rows(spark, newer)

@@ -11,7 +11,7 @@ import hashlib
 import pytest
 
 from wvfoia_sync_spark.functions import text as text_fns
-from wvfoia_sync_spark.operators import gram_index
+from wvfoia_sync_spark.operators import gram_index, segments
 
 
 def _docs(spark, rows):
@@ -197,7 +197,7 @@ def test_gram_index_crash_and_orphan_tolerance(spark, tmp_path):
     )
 
     # (a) crash-simulated append: manifest bumped, no data written
-    man = gram_index._manifest_read(idx)
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
     man["max_seg"] = 1
     with open(f"{idx}/_manifest.json", "w") as f:
         json.dump(man, f)
@@ -320,57 +320,6 @@ def test_batch_gate_prunes_stored_scan(spark, tmp_path):
     )
 
 
-def test_reader_safe_compaction_leaves_old_tree(spark, tmp_path):
-    """r11 (VERDICT r10 task 4): publish-aside compaction. A DataFrame
-    planned against the OLD tree before the compaction still collects
-    correctly afterwards (the in-place swap's documented failure
-    case); the returned NEW path holds the compacted single-segment
-    equivalent; re-running without appends short-circuits to the same
-    published dir; appending to the old tree then compacting again
-    publishes a FRESH dir containing the append."""
-    import os
-
-    idx = str(tmp_path / "idx")
-    gram_index.write_gram_index(_docs(spark, [(1, A), (2, B)]), idx, span=6)
-    NEW = "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10 n11 n12"
-    gram_index.append_gram_index(_docs(spark, [(1, NEW)]), idx)
-
-    expected = sorted(
-        map(tuple, gram_index.load_gram_index(spark, idx).collect())
-    )
-    planned = gram_index.load_gram_index(spark, idx)  # NOT yet collected
-    new_path = gram_index.compact_gram_index(spark, idx, reader_safe=True)
-    assert new_path != idx
-    # old tree fully intact: the pre-compaction plan still collects
-    assert os.path.exists(os.path.join(idx, "_manifest.json"))
-    assert sorted(map(tuple, planned.collect())) == expected
-    # new tree: compacted, same live set, generation bumped
-    man = gram_index._manifest_read(new_path)
-    assert man["max_seg"] == 0 and man["gen"] == 1
-    assert (
-        sorted(
-            map(tuple, gram_index.load_gram_index(spark, new_path).collect())
-        )
-        == expected
-    )
-    assert gram_index.gram_index_staleness(spark, new_path) == {
-        "max_seg": 0,
-        "stale_fraction": 0.0,
-    }
-    # idempotent without new appends
-    assert gram_index.compact_gram_index(spark, idx, reader_safe=True) == (
-        new_path
-    )
-    # append-aware: old tree moves on -> fresh published dir
-    gram_index.append_gram_index(
-        _docs(spark, [(3, "p1 p2 p3 p4 p5 p6 p7")]), idx
-    )
-    newer = gram_index.compact_gram_index(spark, idx, reader_safe=True)
-    assert newer not in (new_path, idx)
-    live3 = gram_index.load_gram_index(spark, newer)
-    assert live3.where(live3.doc_id == 3).count() == 2
-
-
 def test_gate_then_append_ingest_loop(spark, tmp_path):
     """The production ingest LOOP the gate and append exist for: gate a
     batch against the index, admit it, APPEND the admitted docs as a
@@ -395,46 +344,6 @@ def test_gate_then_append_ingest_loop(spark, tmp_path):
     # novel text still passes whole
     novel = _gate_runs(spark, idx, _docs(spark, [(22, B)]))
     assert [(r[0], r[2]) for r in novel] == [(22, 10)]
-
-
-def test_compact_aside_crash_leaves_everything_intact(spark, tmp_path):
-    """A publish-aside build that CRASHES mid-write must leave the old
-    tree untouched, publish nothing, clean its temp dir, and let a
-    retry succeed (derived.publish's build-in-unique-tmp contract
-    applied to compaction)."""
-    import os
-
-    from wvfoia_sync_spark.operators import segments
-
-    idx = str(tmp_path / "idx")
-    gram_index.write_gram_index(_docs(spark, [(1, A), (2, B)]), idx, span=6)
-    before = sorted(
-        map(tuple, gram_index.load_gram_index(spark, idx).collect())
-    )
-    man = gram_index._manifest_read(idx)
-
-    def exploding(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        open(os.path.join(tmp, "partial"), "w").close()
-        raise RuntimeError("mid-build crash")
-
-    with pytest.raises(RuntimeError, match="mid-build crash"):
-        segments.compact_aside(idx, man, exploding)
-    parent = os.path.dirname(idx)
-    residue = [n for n in os.listdir(parent) if "._rs_" in n or ".build-" in n]
-    assert residue == []  # nothing published, temp cleaned
-    assert (
-        sorted(map(tuple, gram_index.load_gram_index(spark, idx).collect()))
-        == before
-    )
-    # retry succeeds and publishes the real thing
-    new_path = gram_index.compact_gram_index(spark, idx, reader_safe=True)
-    assert (
-        sorted(
-            map(tuple, gram_index.load_gram_index(spark, new_path).collect())
-        )
-        == before
-    )
 
 
 def test_stolen_first_occurrences_planted(spark, tmp_path):
@@ -908,50 +817,32 @@ def test_compact_backfill_raises_on_corpus_drift(spark, tmp_path):
     assert got == [(1, 6), (1, 7)]
 
 
-def test_compact_backfill_reader_safe_publishes_upgraded_aside(
+def test_compact_backfill_after_plain_compaction_upgrades_in_place(
     spark, tmp_path
 ):
-    """The upgrade composes with publish-aside: the OLD membership tree
-    is untouched (still raising the rebuild hint), the returned NEW
-    path serves first occurrences — and (r13 review) the upgrade keys
-    a DISTINCT aside dir from a plain compaction of the SAME snapshot,
-    so an earlier plain aside can't make rename-if-absent silently
-    swallow the upgrade request."""
+    """A plain in-place compaction first (generation 1, membership
+    only) does not stop a later backfill compaction of the same live
+    rows from upgrading the index: the upgrade lands in place, bumps
+    the generation again, and serves first occurrences."""
     idx = str(tmp_path / "idx")
     gram_index.write_gram_index(_docs(spark, [(1, A), (2, B)]), idx, span=6)
-    # a plain aside compaction of this snapshot exists FIRST
-    plain = gram_index.compact_gram_index(spark, idx, reader_safe=True)
-    new_path = gram_index.compact_gram_index(
-        spark,
-        idx,
-        reader_safe=True,
-        backfill_first_from=_docs(spark, [(1, A), (2, B)]),
-    )
-    assert new_path != idx
-    assert new_path != plain  # the layout bit joined the aside key
-    with pytest.raises(ValueError, match="with_first=True"):
-        gram_index.stolen_first_occurrences(
-            spark, plain, _docs(spark, [(0, SHARED)])
-        )
-    # re-running the upgrade is idempotent onto the SAME upgraded dir
-    assert (
-        gram_index.compact_gram_index(
-            spark,
-            idx,
-            reader_safe=True,
-            backfill_first_from=_docs(spark, [(1, A), (2, B)]),
-        )
-        == new_path
-    )
+    gram_index.compact_gram_index(spark, idx)
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
+    assert man["gen"] == 1 and man["with_first"] is False
     with pytest.raises(ValueError, match="with_first=True"):
         gram_index.stolen_first_occurrences(
             spark, idx, _docs(spark, [(0, SHARED)])
         )
+    gram_index.compact_gram_index(
+        spark, idx, backfill_first_from=_docs(spark, [(1, A), (2, B)])
+    )
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
+    assert man["gen"] == 2 and man["with_first"] is True
     got = sorted(
         map(
             tuple,
             gram_index.stolen_first_occurrences(
-                spark, new_path, _docs(spark, [(0, SHARED)])
+                spark, idx, _docs(spark, [(0, SHARED)])
             ).collect(),
         )
     )

@@ -7,6 +7,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _load_tool(name):
@@ -215,6 +216,45 @@ def test_bench_diff_envelope_rule_on_committed_r14_runs():
     assert out["regressed"] == {"q": [1.0, 1.6, 1.6]}
     assert out["improved"] == {"s": [3.0, 1.0, 0.33]}
     assert out["noise_n"] == 1
+
+    # runs of different scale factors do not compare: the diff refuses
+    # and names the key and both values instead of reporting the scale
+    # factor as improved rows
+    other_sf = json.loads(json.dumps(runs["BENCH_SELF_r14"]))
+    other_sf["sf"] = 0.01
+    with pytest.raises(ValueError, match=r"sf differs \(OLD 0\.1, NEW 0\.01\)"):
+        bd.diff(runs["BENCH_SELF_r14"], other_sf)
+
+
+def test_segment_protocol_lives_only_in_segments():
+    """The segment lifecycle's write protocol has one copy: no package
+    module but operators/segments.py calls the manifest writer, the
+    reserve/commit pair, next_seg, the compaction swap or the writer
+    lease. An index describes its segments.Layout and calls
+    segments.build/append/compact instead of another copy of them."""
+    import ast
+
+    root = Path(__file__).resolve().parent.parent / "wvfoia_sync_spark"
+    protocol = {
+        "write_manifest",
+        "reserve_seg",
+        "commit_seg",
+        "next_seg",
+        "compact_swap",
+        "writer_lease",
+    }
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/segments.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "attr", getattr(f, "id", None))
+                if name in protocol:
+                    calls.append(f"{rel}:{node.lineno} {name}")
+    assert calls == []
 
 
 def test_every_package_function_has_a_caller():

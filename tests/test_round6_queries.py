@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from wvfoia_sync_spark import registry
-from wvfoia_sync_spark.operators import textops
+from wvfoia_sync_spark.operators import segments, textops
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -1126,7 +1126,8 @@ def test_compact_band_index_equivalent_and_recaps(spark, tmp_path):
         a = _rowset(spark.read.parquet(f"{idx}/{sub}"))
         b = _rowset(spark.read.parquet(f"{idx_fresh}/{sub}"))
         assert a == b, f"{sub} diverged: {len(a ^ b)} rows"
-    assert jobs._band_manifest_read(idx)["max_seg"] == 0
+    man = segments.read_manifest(idx, jobs.BAND_MANIFEST)
+    assert man["max_seg"] == 0
     assert any(d.startswith("pbucket=") for d in os.listdir(f"{idx}/bands"))
 
     pairs_c = _gate_pairs(spark, tmp_path, idx, "compact")

@@ -1,11 +1,9 @@
-"""Unit tests for the shared segment-lifecycle core
-(operators/segments.py, r10): the three stored indexes (FTS, band, ANN)
-all delegate manifest IO, newest-wins resolution, and compaction swap
-here, so the contract is pinned once. The index-level behaviors remain
-pinned end-to-end by tests/test_fts_index_incremental.py,
-tests/test_round6_queries.py (band lifecycle), and
-tests/test_ann_index.py — all green UNCHANGED across the extraction,
-which is the refactor's acceptance criterion (VERDICT r9 item 2).
+"""Unit tests for the segment lifecycle (operators/segments.py): the
+four stored indexes (FTS, band, ANN, n-gram) all run their build,
+append, load, staleness and compaction through it, so the contract is
+pinned once. The index-level behaviors remain pinned end-to-end by
+tests/test_fts_index_incremental.py, tests/test_round6_queries.py (band
+lifecycle), tests/test_ann_index.py and tests/test_gram_index.py.
 """
 
 from __future__ import annotations
@@ -184,7 +182,7 @@ def test_reserved_uncommitted_append_invisible_to_gram_readers(spark, tmp_path):
         map(tuple, gram_index.load_gram_index(spark, idx).collect())
     )
     # in-flight append: reserve + write data, no commit
-    man = gram_index._manifest_read(idx)
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
     seg = segments.reserve_seg(idx, "_manifest.json", man)
     delta = spark.createDataFrame(
         [(1, "b1 b2 b3 b4 b5 b6 b7")], "doc_id long, text string"
@@ -250,7 +248,7 @@ def test_legacy_gram_index_first_append_invisible_until_commit(spark, tmp_path):
         [(1, "a1 a2 a3 a4 a5 a6 a7 a8")], "doc_id long, text string"
     )
     gram_index.write_gram_index(docs, idx, span=6)
-    man = gram_index._manifest_read(idx)
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
     for k in ("committed_seg", "gen"):
         man.pop(k, None)
     segments.write_manifest(idx, "_manifest.json", man)
@@ -259,7 +257,7 @@ def test_legacy_gram_index_first_append_invisible_until_commit(spark, tmp_path):
         map(tuple, gram_index.load_gram_index(spark, idx).collect())
     )
     # in-flight first append against the legacy manifest
-    man = gram_index._manifest_read(idx)
+    man = segments.read_manifest(idx, gram_index.MANIFEST)
     seg = segments.reserve_seg(idx, "_manifest.json", man)
     delta = spark.createDataFrame(
         [(2, "b1 b2 b3 b4 b5 b6 b7")], "doc_id long, text string"
@@ -317,3 +315,56 @@ def test_concurrent_streams_hold_independent_snapshot_caches(spark):
         assert calls_b == [1]
     finally:
         close_b()
+
+
+def test_legacy_band_index_failed_append_stays_invisible(
+    spark, tmp_path, monkeypatch
+):
+    """The band append goes through reserve_seg's legacy pin like every
+    other index: against a manifest without ``committed_seg``, an
+    append that dies after its bands write leaves the snapshot at the
+    last complete segment, so readers and the staleness trigger see
+    nothing of the half-written segment."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from wvfoia_sync_spark.streaming import jobs
+
+    idx = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa")],
+        "doc_id long, text string",
+    )
+    jobs.write_band_index(docs, idx, num_hashes=16, bands=4)
+    man = segments.read_manifest(idx, jobs.BAND_MANIFEST)
+    for k in ("committed_seg", "gen"):
+        man.pop(k)
+    segments.write_manifest(idx, jobs.BAND_MANIFEST, man)
+    before = [
+        sorted(map(tuple, df.collect()))
+        for df in jobs.load_band_index(spark, idx)
+    ]
+
+    parquet = DataFrameWriter.parquet
+
+    def dies_on_shingles(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith("shingles"):
+            raise RuntimeError("append died after its bands write")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_on_shingles)
+    delta = spark.createDataFrame(
+        [(1, "lambda mu nu xi omicron"), (3, "pi rho sigma tau upsilon")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(RuntimeError, match="after its bands write"):
+        jobs.append_band_index(delta, idx)
+    monkeypatch.undo()
+
+    on_disk = segments.read_manifest(idx, jobs.BAND_MANIFEST)
+    assert on_disk["max_seg"] == 1  # the segment was reserved ...
+    assert segments.snapshot_seg(on_disk) == 0  # ... but is not visible
+    assert jobs.band_index_staleness(spark, idx)["stale_fraction"] == 0.0
+    assert [
+        sorted(map(tuple, df.collect()))
+        for df in jobs.load_band_index(spark, idx)
+    ] == before

@@ -90,7 +90,7 @@ def test_two_writers_one_wins_index_equals_serial(spark, tmp_path):
     )
     assert got == want
     # both appends committed as DISTINCT segments (no id reuse)
-    assert gram_index._manifest_read(idx)["committed_seg"] == 2
+    assert segments.read_manifest(idx, gram_index.MANIFEST)["committed_seg"] == 2
     # lease released on the way out
     assert not os.path.exists(_lease_file(idx))
 
@@ -355,7 +355,7 @@ def test_three_writers_race_over_dead_holder_single_winner(
     )
     assert got == want
     # all three appends committed as DISTINCT segments (no id reuse)
-    assert gram_index._manifest_read(idx)["committed_seg"] == 3
+    assert segments.read_manifest(idx, gram_index.MANIFEST)["committed_seg"] == 3
     # no lease or break marker left behind
     assert not os.path.exists(_lease_file(idx))
     assert not os.path.exists(_lease_file(idx) + ".break")

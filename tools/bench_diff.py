@@ -19,11 +19,14 @@ noise). Passing several OLD runs widens the envelope to cover that
 swing.
 
 An artifact is either the bench's stdout line or a capture that wraps it
-under ``"parsed"``.
+under ``"parsed"``. Artifacts of different scale factors (``sf``) or
+layouts (``layout``) are not comparable: diffing them would report the
+scale factor as improved or regressed rows, so the diff refuses.
 
 Usage: python tools/bench_diff.py OLD.json [OLD.json ...] NEW.json
 Prints one JSON line and exits 0 (informational); given fewer than two
-files, prints this text and exits 1.
+files, prints this text and exits 1; given an OLD whose ``sf`` or
+``layout`` differs from NEW's, names the key and both values and exits 1.
 """
 
 from __future__ import annotations
@@ -40,7 +43,17 @@ def _queries(artifact: dict) -> dict[str, float]:
 
 
 def diff(old: dict | list[dict], new: dict) -> dict:
-    olds = [_queries(o) for o in (old if isinstance(old, list) else [old])]
+    old = old if isinstance(old, list) else [old]
+    line = new.get("parsed", new)
+    for o in old:
+        for key in ("sf", "layout"):
+            a, b = o.get("parsed", o).get(key), line.get(key)
+            if a != b:
+                raise ValueError(
+                    f"bench_diff: {key} differs (OLD {a!r}, NEW {b!r}); "
+                    "only runs of one scale factor and layout compare"
+                )
+    olds = [_queries(o) for o in old]
     qn = _queries(new)
     qo: dict[str, float] = {}
     for q in olds:
@@ -68,7 +81,10 @@ def main() -> None:
     if len(sys.argv) < 3:
         sys.exit(__doc__)
     *olds, new = [json.load(open(p)) for p in sys.argv[1:]]
-    print(json.dumps(diff(olds, new)))
+    try:
+        print(json.dumps(diff(olds, new)))
+    except ValueError as e:
+        sys.exit(str(e))
 
 
 if __name__ == "__main__":

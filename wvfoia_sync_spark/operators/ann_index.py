@@ -26,11 +26,10 @@ legacy layout made the read schema depend on which parquet footer Spark
 sampled — r9 advice); pointing upsert at an unversioned directory
 raises via the missing manifest instead of defaulting.
 
-Lifecycle mechanics (manifest IO, newest-wins resolution,
-single-segment fast path, whole-directory compaction swap) are the
-shared segment core — operators/segments.py. Derived-state cache
-discipline per sources/derived.py: content-fingerprinted paths,
-rename-if-absent publication.
+The segment lifecycle (build, append, newest-wins load, compaction) is
+operators/segments.py; this module owns the encoding and the layout:
+one table at the index root, partitioned by ``ivf_cell``, keyed by the
+build's id column.
 """
 
 from __future__ import annotations
@@ -41,15 +40,22 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import derived
-from ..sources.tables import read_parquet
 from . import segments, similarity
 
-# the manifest doubles as the stats file location of the v1 format;
-# the old per-cell stats are gone (csim supersedes them), so the file
-# holds lifecycle state only. Aliases kept for callers/tests.
 MANIFEST = "_ann_manifest.json"
-STATS_FILE = MANIFEST
-_MAX_SEG_KEY = segments.MAX_SEG_KEY  # "max_seg"
+
+
+def _index_id_col(_man: dict, columns: list[str]) -> str:
+    """The stored index's id column: whatever the build's id_col was —
+    the one column that is not codes, cell, fit, or segment."""
+    rest = [c for c in columns if c not in ("pq_code", "ivf_cell", "seg", "csim")]
+    if len(rest) != 1:
+        raise ValueError(f"ambiguous index id column among {columns}")
+    return rest[0]
+
+
+# one table at the index root; the id column is the build's choice
+LAYOUT = segments.Layout(MANIFEST, {"": "ivf_cell"}, live="", id_col=_index_id_col)
 
 
 def index_path(sf_dir: str, n_cells: int, m: int, n_cents: int) -> str:
@@ -128,22 +134,11 @@ def build_ann_index(
     """Materialize (id, pq_code, csim) partitioned by ivf_cell, plus the
     lifecycle manifest. Idempotent: an existing complete index
     (published marker) is returned as-is."""
-
-    def build(tmp: str) -> None:
-        idx = _encode(emb, centroids, codebooks, id_col, vec_col)
-        # one file per cell at test scale; a cluster build keeps task
-        # parallelism per cell instead; seg=0 is the segment column the
-        # upsert/compact lifecycle resolves newest-wins
-        idx.withColumn("seg", F.lit(0)).repartition("ivf_cell").write.mode(
-            "overwrite"
-        ).partitionBy("ivf_cell").parquet(tmp)
-        segments.write_manifest(
-            tmp,
-            MANIFEST,
-            {segments.MAX_SEG_KEY: 0, "committed_seg": 0, "gen": 0},
-        )
-
-    return derived.publish(build, out)
+    return segments.build(
+        LAYOUT,
+        out,
+        lambda: {"": _encode(emb, centroids, codebooks, id_col, vec_col)},
+    )
 
 
 class CentroidDriftError(RuntimeError):
@@ -207,15 +202,6 @@ def upsert_ann_index(
     degrading recall (n_probe pruning assumes vectors actually live near
     their assigned centroid).
 
-    Appends go through the parquet committer (new part files land under
-    their `ivf_cell=` dirs only at task commit); a crashed upsert leaves
-    orphan temp files, not corrupt data — a table format (Delta/Iceberg)
-    supplies full transactionality in production. Like the FTS upsert,
-    the manifest bump is single-writer — ENFORCED as of r12 by the
-    index's writer lease (segments.writer_lease): a concurrent
-    upserter raises ConcurrentWriterError instead of double-reserving;
-    crashed holders auto-break (pid-dead same host, or TTL).
-
     RE-ARRIVING vec_ids are SAFE: the delta lands as a NEW SEGMENT
     (``seg = max_seg + 1``) and readers (load_ann_index,
     compact_ann_index, the drift baseline) resolve each vec_id to its
@@ -226,8 +212,8 @@ def upsert_ann_index(
     a legacy layout (r9 advice, medium: mixed footers made the read
     schema sampling-dependent and the live join silently dropped every
     pre-upgrade vector)."""
-    with segments.writer_lease(index_dir):
-        man = segments.read_manifest(index_dir, MANIFEST)
+
+    def rows(_man: dict) -> dict[str, DataFrame]:
         drift = check_centroid_drift(
             delta, centroids, index_dir, vec_col, id_col
         )
@@ -237,93 +223,23 @@ def upsert_ann_index(
                 f"(tolerance {drift_tolerance:.0%}); retrain centroids and "
                 "rebuild instead of upserting"
             )
-        # two-phase (segments.snapshot_seg's protocol): RESERVE the seg
-        # id before any data, write the codes, then COMMIT — readers
-        # bound to the committed seg never see an in-flight or crashed
-        # append's partial segment; the id is never reused so a retry
-        # wins
-        seg = segments.reserve_seg(index_dir, MANIFEST, man)
-        idx = _encode(delta, centroids, codebooks, id_col, vec_col)
-        idx.withColumn("seg", F.lit(seg)).repartition("ivf_cell").write.mode(
-            "append"
-        ).partitionBy("ivf_cell").parquet(index_dir)
-        segments.commit_seg(index_dir, MANIFEST, man, seg)
-        return index_dir
+        return {"": _encode(delta, centroids, codebooks, id_col, vec_col)}
 
-
-def _index_id_col(df: DataFrame) -> str:
-    """The stored index's id column: whatever the build's id_col was —
-    the one column that is not codes, cell, fit, or segment."""
-    rest = [
-        c for c in df.columns if c not in ("pq_code", "ivf_cell", "seg", "csim")
-    ]
-    if len(rest) != 1:
-        raise ValueError(f"ambiguous index id column among {df.columns}")
-    return rest[0]
+    segments.append(LAYOUT, index_dir, rows)
+    return index_dir
 
 
 def load_ann_index(spark: SparkSession, path: str) -> DataFrame:
-    """CURRENT index state: newest segment wins per vec_id. The
-    single-segment fast path (max_seg == 0: a fresh build or a
-    just-compacted index, the common case) skips the live join
-    entirely, so queries over an un-upserted index pay zero resolution
-    overhead — the shared segment-core pattern."""
-    bound = segments.snapshot_seg(segments.read_manifest(path, MANIFEST))
-    df = segments.bounded(read_parquet(spark, path), bound)
-    if bound == 0:
-        return df.drop("seg")
-    id_col = _index_id_col(df)
-    return segments.resolve_newest(df, segments.live_view(df, id_col), id_col)
+    """CURRENT index state: newest segment wins per vec_id
+    (segments.load; a single-segment index pays no resolution)."""
+    return segments.load(spark, LAYOUT, path)[""]
 
 
-def compact_ann_index(
-    spark: SparkSession, path: str, reader_safe: bool = False
-) -> str:
-    """Fold all upserted segments back into a single-segment index:
-    newest-wins resolution materializes, stale versions' rows are
-    physically dropped, and the ``ivf_cell=`` partition layout (the
-    PartitionFilter pruning contract) is rebuilt identically. The
-    drift baseline is untouched BY CONSTRUCTION — it aggregates live
-    rows' csim, and compaction only drops rows that were already
-    shadowed. Publication via the shared whole-directory swap
-    (segments.compact_swap): the max_seg=0 manifest is written into
-    the temp dir BEFORE the swap, so no crash leaves a manifest
-    disagreeing with the layout. Crash-safe single-writer rewrite;
-    NOT safe for concurrent readers mid-query — see compact_swap.
-    ``reader_safe=True`` (r11) publishes aside into a new
-    (gen, committed)-keyed sibling instead, leaving this dir intact
-    and RETURNING the new path (segments.compact_aside). The in-place
-    mode holds the writer lease from manifest read to swap (r12);
-    aside mode needs none (source untouched, snapshot-keyed publish)."""
-    import contextlib
-
-    ctx = (
-        contextlib.nullcontext() if reader_safe else segments.writer_lease(path)
-    )
-    with ctx:
-        return _compact_ann_index_locked(spark, path, reader_safe)
-
-
-def _compact_ann_index_locked(
-    spark: SparkSession, path: str, reader_safe: bool
-) -> str:
-    man = segments.read_manifest(path, MANIFEST)
-    live = load_ann_index(spark, path)
-
-    def write_into(tmp: str) -> None:
-        live.withColumn("seg", F.lit(0)).repartition("ivf_cell").write.mode(
-            "overwrite"
-        ).partitionBy("ivf_cell").parquet(tmp)
-        segments.write_manifest(
-            tmp,
-            MANIFEST,
-            {
-                segments.MAX_SEG_KEY: 0,
-                "committed_seg": 0,
-                "gen": man.get("gen", 0) + 1,  # ABA guard for caches
-            },
-        )
-
-    if reader_safe:
-        return segments.compact_aside(path, man, write_into)
-    return segments.compact_swap(path, write_into)
+def compact_ann_index(spark: SparkSession, path: str) -> str:
+    """Fold all upserted segments back into a single-segment index in
+    place (segments.compact): stale versions' rows are physically
+    dropped and the ``ivf_cell=`` partition layout (the PartitionFilter
+    pruning contract) is rebuilt identically. The drift baseline is
+    untouched BY CONSTRUCTION — it aggregates live rows' csim, and
+    compaction only drops rows that were already shadowed."""
+    return segments.compact(spark, LAYOUT, path)

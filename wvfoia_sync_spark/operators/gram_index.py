@@ -34,31 +34,8 @@ Layout (plain parquet under ``path``):
   DISAGREEING explicit span raises instead of silently indexing
   incomparable grams.
 
-Lifecycle (mechanics from operators/segments.py): fresh build is
-seg 0; ``append_gram_index`` writes the delta as seg max+1
-(re-arriving ids allowed — readers resolve newest-segment-wins per
-doc, so an updated doc's OLD grams stop gating the moment the append
-lands); ``compact_gram_index`` folds live rows back to seg 0 through
-the whole-directory crash-safe swap; ``gram_index_staleness`` is the
-computable compaction trigger (band_index_staleness's shape).
-
-CRASH/CONCURRENCY CONTRACT (single writer — ENFORCED as of r12 by
-segments.writer_lease on every append and in-place compaction, as on
-every index here): an
-append RESERVES its segment id by bumping ``max_seg`` BEFORE any data
-is written, and COMMITS by setting ``committed_seg`` only after all of
-the segment's data is complete; every reader bounds its scan to
-``seg <= committed_seg`` (segments.snapshot_seg) as of its own
-manifest read. Consequences: (a) a crash mid-append leaves a manifest
-whose reservation is ahead of its commit — the partial segment is
-INVISIBLE to every reader, never a torn newest-wins view, and the
-segment id is NEVER reused, so re-running the same append repairs the
-index completely (the retry's segment is newer and wins); (b) a
-reader that grabbed the manifest before a concurrent append CANNOT
-half-see it (the new segment is above its committed bound) — the
-snapshot-isolation contract the streaming gate's per-batch manifest
-re-read builds on, including the 0 -> 1 transition where the reader
-has no live join at all.
+The lifecycle (build, append with re-arriving ids, newest-wins load,
+staleness, compaction under the writer lease) is operators/segments.py.
 """
 
 from __future__ import annotations
@@ -70,10 +47,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import text as text_fns
 from ..sources import derived
-from ..sources.tables import read_parquet
 from . import segments
 
-_MANIFEST = "_manifest.json"
+MANIFEST = "_manifest.json"
+LAYOUT = segments.Layout(
+    MANIFEST,
+    {"grams": "gbucket", "live": None},
+    live="live",
+    id_col=lambda man, _columns: man["id_col"],
+)
 
 
 def gram_index_path(
@@ -105,10 +87,6 @@ def gram_index_path(
         params=f"v2{first}_s{span}_p{prune_buckets}{suffix}",
         fingerprint_of=[os.path.join(sf_dir, "documents.parquet")],
     )
-
-
-def _manifest_read(path: str) -> dict:
-    return segments.read_manifest(path, _MANIFEST)
 
 
 def doc_grams(
@@ -153,15 +131,18 @@ def doc_grams(
     return grams.select(id_col, "g").distinct()
 
 
-def _segment_rows(
+def _gbucket(prune_buckets: int):
+    return F.pmod(F.xxhash64("g"), F.lit(prune_buckets)).cast("int")
+
+
+def _rows(
     docs: DataFrame,
     span: int,
     id_col: str,
     text_col: str,
-    seg: int,
     prune_buckets: int,
     with_first: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> dict[str, DataFrame]:
     """(grams rows, live rows) for one segment. live comes from the
     DELTA'S ids, never from the gram rows: a re-arrived doc whose new
     text is shorter than ``span`` yields NO grams, and deriving live
@@ -170,11 +151,10 @@ def _segment_rows(
     A live row pointing at a segment with zero grams is the correct
     representation of "this doc's current text contains no grams"."""
     g = doc_grams(docs, span, id_col, text_col, with_first=with_first)
-    rows = g.withColumn("seg", F.lit(seg)).withColumn(
-        "gbucket", F.pmod(F.xxhash64("g"), F.lit(prune_buckets)).cast("int")
-    )
-    live = docs.select(id_col).distinct().withColumn("seg", F.lit(seg))
-    return rows, live
+    return {
+        "grams": g.withColumn("gbucket", _gbucket(prune_buckets)),
+        "live": docs.select(id_col).distinct(),
+    }
 
 
 def write_gram_index(
@@ -195,37 +175,15 @@ def write_gram_index(
     each (doc, gram)'s first in-doc position alongside membership —
     the layout delta_report needs; pinned in the manifest so appends
     match and readers can demand it."""
-    rows, live = _segment_rows(
-        corpus, span, id_col, text_col, 0, prune_buckets, with_first
+    return segments.build(
+        LAYOUT,
+        path,
+        lambda: _rows(corpus, span, id_col, text_col, prune_buckets, with_first),
+        span=span,
+        prune_buckets=prune_buckets,
+        id_col=id_col,
+        with_first=with_first,
     )
-
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        # repartition on the partition column (fts_index posture):
-        # without it every writer task emits a file into every bucket
-        # dir — writers x buckets tiny files whose listing+footer
-        # overhead dominates the gate's stored scan (measured 384 files
-        # vs 64 at sf0.1)
-        rows.repartition("gbucket").write.mode("overwrite").partitionBy(
-            "gbucket"
-        ).parquet(f"{tmp}/grams")
-        live.write.mode("overwrite").parquet(f"{tmp}/live")
-        segments.write_manifest(
-            tmp,
-            _MANIFEST,
-            {
-                "max_seg": 0,
-                "committed_seg": 0,
-                "gen": 0,
-                "span": span,
-                "prune_buckets": prune_buckets,
-                "id_col": id_col,
-                "with_first": with_first,
-            },
-        )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    return derived.publish(build, path)
 
 
 def append_gram_index(
@@ -235,153 +193,57 @@ def append_gram_index(
     text_col: str = "text",
 ) -> int:
     """Append a delta as a NEW segment — O(|delta|), never touches the
-    stored corpus. Re-arriving ids are the supported update path:
-    their fresh grams land in the new segment and every reader resolves
-    newest-segment-wins, so the stale text stops gating immediately.
-    An explicit ``span`` that disagrees with the manifest RAISES
-    (grams of different spans never match — the append would silently
-    contribute nothing). The id column comes from the manifest — it is
-    an index property, not a per-call choice.
+    stored corpus (segments.append). Re-arriving ids are the supported
+    update path: their fresh grams land in the new segment and every
+    reader resolves newest-segment-wins, so the stale text stops gating
+    immediately. An explicit ``span`` that disagrees with the manifest
+    RAISES (grams of different spans never match — the append would
+    silently contribute nothing). The id column comes from the manifest
+    — it is an index property, not a per-call choice."""
 
-    ORDERING (see module docstring): the segment id is RESERVED first
-    (max_seg bump), then grams/ is written, then live/, then the
-    COMMIT. grams-before-live is the safe data order even independent
-    of the commit fence: a live row at seg N asserts that doc's seg-N
-    gram set is complete (it is what retires the doc's OLD grams), so
-    live must never be observable before its grams — the reverse order
-    would let a crash retire a re-arrived doc's old grams with the new
-    ones missing. With the two-phase commit neither table is visible
-    until the commit lands; re-running the append repairs fully.
-
-    Single-writer ENFORCED (r12, VERDICT r11 task 5): the whole append
-    — manifest read through commit — runs under the index's writer
-    lease, so a concurrent appender raises ConcurrentWriterError
-    instead of double-reserving a segment id (the manifest read must
-    be inside the lease too, or a raced reservation off a stale
-    max_seg re-creates exactly the interleave the lease exists to
-    prevent). A failed append releases the lease on the way out; a
-    CRASHED one is broken automatically once its pid is provably dead
-    (same host) or its TTL lapses — see segments.writer_lease."""
-    with segments.writer_lease(path):
-        man = _manifest_read(path)
+    def rows(man: dict) -> dict[str, DataFrame]:
         if span is not None and span != man["span"]:
             raise ValueError(
                 f"append_gram_index(span={span}) disagrees with the index "
                 f"manifest (span={man['span']}); grams of different spans "
                 "never match — rebuild the index at the new span instead."
             )
-        # two-phase (segments.snapshot_seg's protocol): RESERVE the id
-        # before any data (crash never reuses it; the retry is newer and
-        # wins), write all data, then COMMIT — readers bound to the
-        # committed seg, so an in-flight or crashed append's partial
-        # segment is invisible on every path, and snapshot caches keyed on
-        # (gen, committed) re-derive exactly when the segment becomes real
-        seg = segments.reserve_seg(path, _MANIFEST, man)
-        rows, live = _segment_rows(
+        return _rows(
             delta,
             man["span"],
             man["id_col"],
             text_col,
-            seg,
             man["prune_buckets"],
             man.get("with_first", False),
         )
-        rows.repartition("gbucket").write.mode("append").partitionBy(
-            "gbucket"
-        ).parquet(f"{path}/grams")
-        live.write.mode("append").parquet(f"{path}/live")
-        segments.commit_seg(path, _MANIFEST, man, seg)
-        return seg
 
-
-def _bounded(spark: SparkSession, path: str, sub: str, max_seg: int) -> DataFrame:
-    """Scan one index table bounded to the manifest snapshot (see
-    segments.bounded — one copy of the predicate)."""
-    return segments.bounded(read_parquet(spark, f"{path}/{sub}"), max_seg)
+    return segments.append(LAYOUT, path, rows)
 
 
 def load_gram_index(spark: SparkSession, path: str) -> DataFrame:
-    """The LIVE gram set (id, g, gbucket): newest-segment-wins per doc,
-    resolved via the DOC-SIZED live table. Single-segment fast path
-    pays zero resolution work — the common state between appends, and
-    permanent after compaction. Bound = the COMMITTED seg (an
-    in-flight append's reserved-but-unwritten segment is invisible)."""
-    man = _manifest_read(path)
-    id_col = man["id_col"]
-    bound = segments.snapshot_seg(man)
-    rows = _bounded(spark, path, "grams", bound)
-    if bound == 0:
-        return rows.drop("seg")
-    live = segments.live_view(_bounded(spark, path, "live", bound), id_col)
-    return segments.resolve_newest(rows, live, id_col)
+    """The LIVE gram set (id, g[, first_i], gbucket): newest-segment-wins
+    per doc, resolved via the DOC-SIZED live table (segments.load)."""
+    return segments.load(spark, LAYOUT, path, ["grams"])["grams"]
 
 
 def gram_index_staleness(spark: SparkSession, path: str) -> dict:
     """{max_seg, stale_fraction} — the computable compaction trigger
-    (band_index_staleness's contract: zero Spark work single-segment;
-    otherwise one grams scan + the DOC-SIZED live aggregate, never
-    costlier than the live-join rent one gate run pays)."""
-    man = _manifest_read(path)
-    bound = segments.snapshot_seg(man)
-    if bound == 0:
-        return {"max_seg": man["max_seg"], "stale_fraction": 0.0}
-    id_col = man["id_col"]
-    rows = _bounded(spark, path, "grams", bound)
-    live = segments.live_view(_bounded(spark, path, "live", bound), id_col)
-    return {
-        "max_seg": man["max_seg"],
-        "stale_fraction": segments.stale_fraction(rows, live, id_col),
-    }
+    (segments.staleness: zero Spark work single-segment; otherwise one
+    grams scan + the DOC-SIZED live aggregate)."""
+    return segments.staleness(spark, LAYOUT, path)
 
 
 def compact_gram_index(
     spark: SparkSession,
     path: str,
-    reader_safe: bool = False,
     backfill_first_from: DataFrame | None = None,
     text_col: str = "text",
 ) -> str:
-    """Fold the live rows back into a single segment. Stale segments'
-    rows are dropped for good; subsequent readers take the
-    single-segment fast path. No pre-materialization needed: both modes
-    run ``write_into`` BEFORE any rename, so the source directory
-    exists for the whole write. Two publication modes (r11, VERDICT
-    r10 task 4):
-
-    - ``reader_safe=False`` (default, in-place): the shared crash-safe
-      whole-directory swap (manifest written into the temp dir BEFORE
-      publication — see segments.compact_swap for the guarantee and
-      its honest caveat: between the two renames the live path briefly
-      does not exist, so a query planned pre-compaction can fail
-      mid-scan). The ingest job's maintenance-window mode; callers
-      keep their path.
-    - ``reader_safe=True`` (publish-aside): the compacted index is
-      published into a NEW sibling directory keyed by the source
-      manifest's (gen, committed_seg) — the sources/derived.py posture
-      the compact_swap docstring names — and the OLD tree is left
-      fully intact, so a DataFrame planned against it before the
-      compaction still collects correctly afterwards. The new path is
-      RETURNED and the caller must re-resolve. The old path keeps
-      serving the uncompacted-but-correct view until the CALLER
-      retires it — publish-aside never deletes it (that is the whole
-      point); superseded publish-aside outputs are likewise the
-      caller's to retire (r12, ADVICE r11 — derived's generation
-      pruner deliberately never stem-prunes ``._rs_`` dirs, since an
-      adopted one is a live single-writer lineage; they are only swept
-      when their whole base fingerprint generation is pruned). Keying
-      on (gen, committed) makes the operation
-      idempotent AND append-aware: re-running without new appends
-      short-circuits to the same published dir; appending to the old
-      tree then compacting again publishes a fresh dir instead of
-      resurrecting the stale one.
-
-    The in-place mode holds the writer lease from the manifest read
-    through the swap (r12): without it, an append landing between the
-    manifest read and the whole-directory rename would have its
-    segment silently dropped by the fold (the fold is bounded by the
-    OLD snapshot). The aside mode needs no lease — it never touches
-    the source tree, and its (gen, committed) keying makes a raced
-    append produce a distinct, correct publish.
+    """Fold the live rows back into a single segment in place
+    (segments.compact). Stale segments' rows are dropped for good;
+    subsequent readers take the single-segment fast path. Docs whose
+    current text has no grams stay live: their live row is what keeps
+    their retired grams dead.
 
     ``backfill_first_from`` (r13, VERDICT r12 missing #3 / task 7):
     in-place ``with_first`` UPGRADE for a membership-only index. The
@@ -399,136 +261,55 @@ def compact_gram_index(
     that disagree with the membership the gate serves. No-op when the
     index already stores positions; corpus docs not live in the index
     are ignored (semi-join on the doc-sized live table)."""
-    import contextlib
 
-    ctx = (
-        contextlib.nullcontext()
-        if reader_safe
-        else segments.writer_lease(path)
-    )
-    with ctx:
-        return _compact_gram_index_locked(
-            spark, path, reader_safe, backfill_first_from, text_col
-        )
-
-
-def _compact_gram_index_locked(
-    spark: SparkSession,
-    path: str,
-    reader_safe: bool,
-    backfill_first_from: DataFrame | None = None,
-    text_col: str = "text",
-) -> str:
-    man = _manifest_read(path)
-    live = load_gram_index(spark, path).withColumn("seg", F.lit(0))
-    # live ids from the live TABLE, not the gram rows: a doc whose
-    # current text has no grams is still live (its row is what keeps
-    # its retired grams dead), and must survive compaction
-    live_ids = (
-        segments.live_view(
-            _bounded(spark, path, "live", segments.snapshot_seg(man)),
-            man["id_col"],
-        )
-        .select(man["id_col"])
-        .withColumn("seg", F.lit(0))
-    )
-
-    backfilled = False
-    if backfill_first_from is not None and not man.get("with_first", False):
+    def fold(man: dict, rows: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        if backfill_first_from is None or man.get("with_first", False):
+            return rows
         id_col = man["id_col"]
-        derived = doc_grams(
+        firsts = doc_grams(
             backfill_first_from, man["span"], id_col, text_col, with_first=True
-        ).join(live_ids.select(id_col), id_col, "left_semi")
-        joined = live.join(derived, [id_col, "g"], "full")
-        # symmetric drift guard, enforced INSIDE the write job (no
-        # extra pass): seg is non-null iff the stored side matched,
-        # first_i iff the derived side did — a null on either side
-        # means the supplied corpus and the live index disagree, and
-        # publishing minima against mismatched membership would make
-        # the delta report silently wrong for exactly the grams that
-        # drifted
-        live = joined.select(
+        ).join(rows["live"], id_col, "left_semi")
+        joined = rows["grams"].join(firsts, [id_col, "g"], "full")
+
+        def present(col: str, msg):
+            # the drift guard, enforced INSIDE the write job (no extra
+            # pass): gbucket is non-null iff the stored side matched,
+            # first_i iff the derived side did — a null on either side
+            # means the supplied corpus and the live index disagree
+            return (
+                F.when(F.col(col).isNull(), F.raise_error(msg))
+                .otherwise(F.col(col))
+                .alias(col)
+            )
+
+        def doc_msg(head: str, tail: str):
+            return F.concat(F.lit(head), F.col(id_col).cast("string"), F.lit(tail))
+
+        man["with_first"] = True
+        grams = joined.select(
             F.col(id_col),
             "g",
-            F.when(
-                F.col("first_i").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "compact_gram_index backfill: live index gram"
-                            " for doc "
-                        ),
-                        F.col(id_col).cast("string"),
-                        F.lit(
-                            " is absent from the supplied corpus — pass the"
-                            " corpus whose text the index currently gates on"
-                        ),
-                    )
+            present(
+                "first_i",
+                doc_msg(
+                    "compact_gram_index backfill: live index gram for doc ",
+                    " is absent from the supplied corpus — pass the corpus"
+                    " whose text the index currently gates on",
                 ),
-            )
-            .otherwise(F.col("first_i"))
-            .alias("first_i"),
-            F.when(
-                F.col("seg").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "compact_gram_index backfill: corpus doc "
-                        ),
-                        F.col(id_col).cast("string"),
-                        F.lit(
-                            " carries a gram absent from the live index —"
-                            " the corpus is newer than the indexed text;"
-                            " append the delta first, then compact"
-                        ),
-                    )
+            ),
+            present(
+                "gbucket",
+                doc_msg(
+                    "compact_gram_index backfill: corpus doc ",
+                    " carries a gram absent from the live index — the"
+                    " corpus is newer than the indexed text; append the"
+                    " delta first, then compact",
                 ),
-            )
-            .otherwise(F.col("seg"))
-            .alias("seg"),
-            "gbucket",
+            ),
         )
-        backfilled = True
+        return {**rows, "grams": grams}
 
-    def write_into(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        live.repartition("gbucket").write.mode("overwrite").partitionBy(
-            "gbucket"
-        ).parquet(f"{tmp}/grams")
-        live_ids.write.mode("overwrite").parquet(f"{tmp}/live")
-        segments.write_manifest(
-            tmp,
-            _MANIFEST,
-            {
-                "max_seg": 0,
-                "committed_seg": 0,
-                # generation bump: post-compaction segment numbering is
-                # a different world — snapshot caches keyed on
-                # (gen, committed) must re-derive even if the committed
-                # NUMBER recurs later (the ABA case)
-                "gen": man.get("gen", 0) + 1,
-                "span": man["span"],
-                "prune_buckets": man["prune_buckets"],
-                "id_col": man["id_col"],
-                "with_first": man.get("with_first", False) or backfilled,
-            },
-        )
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # preserve the derived-cache publish marker across the swap
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    if reader_safe:
-        # the with_first upgrade changes the PHYSICAL LAYOUT of the
-        # same (gen, committed) snapshot, so it must key a DISTINCT
-        # aside dir: without the suffix, an earlier plain compaction
-        # of this snapshot would make rename-if-absent short-circuit
-        # and the upgrade request would be silently ignored (r13
-        # review) — the caller would get back a membership-only dir
-        # despite having supplied the corpus
-        return segments.compact_aside(
-            path, man, write_into, key_suffix="f" if backfilled else ""
-        )
-    return segments.compact_swap(path, write_into)
+    return segments.compact(spark, LAYOUT, path, fold)
 
 
 def match_starts(
@@ -569,7 +350,7 @@ def match_starts(
     skips the no-op predicate but still pays the one bucket-collect
     pass — pass ``prune=False`` for corpus-scaled probes where the
     scan cannot prune anyway."""
-    man = _manifest_read(path)
+    man = segments.read_manifest(path, MANIFEST)
     probe = doc_grams(
         incoming,
         man["span"],
@@ -581,9 +362,7 @@ def match_starts(
     stored = load_gram_index(spark, path)
     if prune:
         nb = man["prune_buckets"]
-        probe = probe.withColumn(
-            "gbucket", F.pmod(F.xxhash64("g"), F.lit(nb)).cast("int")
-        )
+        probe = probe.withColumn("gbucket", _gbucket(nb))
         if not tokenized:
             probe = probe.localCheckpoint()
         gb = [r[0] for r in probe.select("gbucket").distinct().collect()]
@@ -710,7 +489,7 @@ def stolen_first_occurrences(
     flat while the full pass doubles per corpus doubling). Use this
     form at ingest cadence; use exact_substring_delta_report for
     one-shot corpus-scaled comparisons."""
-    man = _manifest_read(path)
+    man = segments.read_manifest(path, MANIFEST)
     if not man.get("with_first", False):
         raise ValueError(
             "stolen_first_occurrences requires a gram index built with "
@@ -728,7 +507,7 @@ def stolen_first_occurrences(
                 _packed(F.col(id_col), F.col("i"), "stolen_first_occurrences")
             ).alias("first_d")
         )
-        .withColumn("gbucket", F.pmod(F.xxhash64("g"), F.lit(nb)).cast("int"))
+        .withColumn("gbucket", _gbucket(nb))
         .localCheckpoint()
     )
     stored = load_gram_index(spark, path)

@@ -1,21 +1,27 @@
-"""Shared segment-lifecycle core for the three stored indexes (r10,
-VERDICT r9 item 2).
+"""The segment lifecycle of the four stored indexes, in one copy.
 
-The FTS posting index (operators/fts_index.py), the stored band index
-(streaming/jobs.py), and the ANN code index (operators/ann_index.py)
-all live on plain parquet with the same Lucene-shaped maintenance
-story: a fresh build is segment 0; each incremental upsert appends its
-rows AS A NEW SEGMENT (``seg = max_seg + 1``, recorded in a tiny JSON
-manifest); readers resolve each key to its NEWEST segment so updated
-rows shadow their stale versions; and a compaction pass folds the live
-rows back into a single segment. Until r9 each index hand-rolled those
-mechanics (~250 near-identical lines of manifest IO, newest-wins
-resolution, single-segment fast paths, and swap choreography) — three
-copies for the next lifecycle bug to land in whichever one drifts.
-This module is the single copy. Each index KEEPS its own physical
-layout (token buckets / pbucket hive dirs / ivf_cell hive dirs) and
-passes layout-specific writes in as a closure; only the subtle shared
-mechanics live here.
+The FTS posting index (operators/fts_index.py), the band index
+(streaming/jobs.py), the ANN code index (operators/ann_index.py) and the
+n-gram index (operators/gram_index.py) all live on plain parquet with
+the same Lucene-shaped maintenance story, and all of it lives here:
+
+- ``build``: a fresh build is segment 0, published rename-if-absent
+  (sources/derived.publish) with the manifest and ``_SUCCESS`` written
+  into the temp dir;
+- ``append``: under the writer lease, a delta lands AS A NEW SEGMENT
+  (``seg = max_seg + 1``) through the two-phase reserve/commit protocol
+  (see snapshot_seg);
+- ``load``: every scan is bounded to the committed snapshot; a
+  single-segment index is read as stored, otherwise each key resolves
+  to its NEWEST segment so updated rows shadow their stale versions;
+- ``staleness``: the share of stored rows resolution discards, the
+  compaction trigger;
+- ``compact``: under the writer lease, the live rows fold back into a
+  single segment, published by the crash-safe whole-directory swap.
+
+An index describes only its ``Layout`` (tables, partition columns, live
+table, id column, manifest name and extra manifest keys) and passes in
+the closures that derive its rows.
 
 Reference parity note: the reference maintains its one index (FTS)
 with SQLite triggers (migrations/0002_fts.sql:17-32); the segment
@@ -28,10 +34,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from dataclasses import dataclass
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from ..sources import derived
+from ..sources.tables import read_parquet
 
 SEG_COL = "seg"
 MAX_SEG_KEY = "max_seg"
@@ -151,9 +161,12 @@ def live_view(df: DataFrame, id_col: str) -> DataFrame:
 
 def resolve_newest(df: DataFrame, live: DataFrame, id_col: str) -> DataFrame:
     """Keep only rows from each key's newest segment: equi-join on
-    (id, seg), then drop the bookkeeping column. Stale segments' rows
-    fall out of the join — Lucene's live-docs filter as a join."""
-    return df.join(live, [id_col, SEG_COL]).drop(SEG_COL)
+    (id, seg), then drop the bookkeeping column, keeping ``df``'s column
+    order. Stale segments' rows fall out of the join — Lucene's
+    live-docs filter as a join."""
+    return df.join(live, [id_col, SEG_COL]).select(
+        *[c for c in df.columns if c != SEG_COL]
+    )
 
 
 def stale_fraction(df: DataFrame, live: DataFrame, id_col: str) -> float:
@@ -235,10 +248,7 @@ def compact_swap(path: str, write_into: Callable[[str], None]) -> str:
     does not exist, and Spark resolves part files lazily per task, so
     a query planned against the old layout can fail once it is
     removed. The guarantee is crash-safe SINGLE-WRITER rewrite — the
-    ingest job's maintenance window. Fully reader-safe publication is
-    a NEW content-keyed directory per sources/derived.py, at the cost
-    of callers re-resolving the path — offered on ALL FOUR indexes as
-    compact_*_index(reader_safe=True) via compact_aside (r11)."""
+    ingest job's maintenance window."""
     tmp = path + "._compact"
     shutil.rmtree(tmp, ignore_errors=True)
     write_into(tmp)
@@ -250,56 +260,166 @@ def compact_swap(path: str, write_into: Callable[[str], None]) -> str:
     return path
 
 
-def compact_aside(
-    path: str,
-    man: dict,
-    write_into: Callable[[str], None],
-    key_suffix: str = "",
+@dataclass(frozen=True)
+class Layout:
+    """What one index stores. ``tables`` maps each table's directory
+    under the index path ("" for the path itself) to its hive partition
+    column (None: unpartitioned). Tables are written in this order and
+    the ``live`` table comes last: it has one row per (key, seg), so it
+    gives each key's newest segment, and a live row retires its key's
+    older rows, so it must never land before the rows it points at.
+    ``id_col`` is the key column, or a function of (manifest, live
+    table columns) for an index whose key is chosen at build."""
+
+    manifest: str
+    tables: dict[str, str | None]
+    live: str
+    id_col: str | Callable[[dict, list[str]], str]
+
+    def __post_init__(self) -> None:
+        assert list(self.tables)[-1] == self.live, "live table goes last"
+
+
+def scan(
+    spark: SparkSession, layout: Layout, path: str, name: str, bound: int
+) -> DataFrame:
+    """One table of the index, bounded to a snapshot (see bounded)."""
+    full = os.path.join(path, name) if name else path
+    return bounded(read_parquet(spark, full), bound)
+
+
+def _key(layout: Layout, man: dict, live_rows: DataFrame) -> str:
+    if isinstance(layout.id_col, str):
+        return layout.id_col
+    return layout.id_col(man, live_rows.columns)
+
+
+def live_map(
+    spark: SparkSession, layout: Layout, path: str, man: dict, bound: int
+) -> DataFrame:
+    """(id, seg) of each key's newest segment within the snapshot."""
+    rows = scan(spark, layout, path, layout.live, bound)
+    return live_view(rows, _key(layout, man, rows))
+
+
+def _current(
+    spark: SparkSession, layout: Layout, path: str, man: dict, names
+) -> dict[str, DataFrame]:
+    bound = snapshot_seg(man)
+    rows = {n: scan(spark, layout, path, n, bound) for n in names}
+    if bound == 0:  # single segment: nothing to resolve
+        return {n: df.drop(SEG_COL) for n, df in rows.items()}
+    live_rows = rows.get(layout.live)
+    if live_rows is None:
+        live_rows = scan(spark, layout, path, layout.live, bound)
+    key = _key(layout, man, live_rows)
+    live = live_view(live_rows, key)
+    return {n: resolve_newest(df, live, key) for n, df in rows.items()}
+
+
+def load(
+    spark: SparkSession, layout: Layout, path: str, names=None
+) -> dict[str, DataFrame]:
+    """The CURRENT rows of the tables in ``names`` (default: all),
+    without ``seg``. Only the named tables and, past segment 0, the
+    live table are read."""
+    man = read_manifest(path, layout.manifest)
+    return _current(spark, layout, path, man, names or list(layout.tables))
+
+
+def staleness(spark: SparkSession, layout: Layout, path: str) -> dict:
+    """{max_seg, stale_fraction}: segments since the last compaction,
+    and the share of the first table's stored rows that resolution
+    discards. Zero Spark work for a single-segment index."""
+    man = read_manifest(path, layout.manifest)
+    bound = snapshot_seg(man)
+    frac = 0.0
+    if bound > 0:
+        rows = scan(spark, layout, path, next(iter(layout.tables)), bound)
+        live_rows = scan(spark, layout, path, layout.live, bound)
+        key = _key(layout, man, live_rows)
+        frac = stale_fraction(rows, live_view(live_rows, key), key)
+    return {MAX_SEG_KEY: man[MAX_SEG_KEY], "stale_fraction": frac}
+
+
+def _write_tables(
+    layout: Layout, root: str, rows: dict[str, DataFrame], seg: int, mode: str
+) -> None:
+    for name, part in layout.tables.items():
+        df = rows[name].withColumn(SEG_COL, F.lit(seg))
+        dest = os.path.join(root, name) if name else root
+        if part is None:
+            df.write.mode(mode).parquet(dest)
+        else:
+            # repartition on the partition column: otherwise every
+            # writer task emits a file into every partition directory
+            df = df.repartition(part)
+            df.write.mode(mode).partitionBy(part).parquet(dest)
+
+
+def _write_index(
+    layout: Layout, tmp: str, rows: dict[str, DataFrame], man: dict
+) -> None:
+    """A complete single-segment index in ``tmp``: tables, then the
+    manifest, then the ``_SUCCESS`` publish marker."""
+    _write_tables(layout, tmp, rows, 0, "overwrite")
+    os.makedirs(tmp, exist_ok=True)
+    write_manifest(tmp, layout.manifest, man)
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+
+def build(
+    layout: Layout, out: str, rows: Callable[[], dict[str, DataFrame]], **keys
 ) -> str:
-    """Reader-safe publish-aside compaction (r11, VERDICT r10 task 4)
-    — the alternative compact_swap's docstring names: ``write_into``
-    materializes the complete compacted index into a NEW sibling
-    directory and PATH is left fully intact, so a DataFrame planned
-    against the old tree before the compaction still collects
-    correctly afterwards (Spark resolves part files lazily per task —
-    the in-place swap's one honest failure window). The new path is
-    RETURNED; the caller re-resolves, and retires the old tree itself
-    (publish-aside never deletes it — that is the point).
+    """Materialize segment 0 of ``rows()`` at ``out`` with a manifest
+    holding ``keys``. Idempotent via rename-if-absent: an existing
+    complete index is returned as is, and ``rows`` is not called."""
+    man = {MAX_SEG_KEY: 0, COMMITTED_KEY: 0, GEN_KEY: 0, **keys}
+    return derived.publish(lambda tmp: _write_index(layout, tmp, rows(), man), out)
 
-    The sibling is keyed by the SOURCE manifest's (gen, committed_seg)
-    and published via derived.publish's rename-if-absent, which makes
-    the operation idempotent AND append-aware: re-running with no new
-    appends short-circuits to the same published dir; appending to the
-    old tree then compacting again publishes a fresh dir instead of
-    resurrecting a stale one. ``write_into`` must write the compacted
-    manifest itself (gen bumped, max/committed = 0, same as the
-    in-place mode); the _SUCCESS publish marker is added here.
 
-    Retirement contract (r12, ADVICE r11): derived's generation pruner
-    never stem-prunes ``._rs_`` dirs directly (a later aside publish
-    must not TTL-prune an earlier aside dir the caller adopted and may
-    be appending to — single-writer per lineage), so aside dirs of the
-    LIVE base are exclusively the caller's to retire once superseded;
-    aside dirs of a SUPERSEDED source fingerprint are pruned with
-    their base generation (they can never be re-resolved).
+def append(
+    layout: Layout, path: str, rows: Callable[[dict], dict[str, DataFrame]]
+) -> int:
+    """Append ``rows(manifest)`` as a new segment; returns its id. The
+    whole append, manifest read through commit, holds the writer
+    lease, so a concurrent appender raises ConcurrentWriterError
+    instead of reserving the same segment. ``rows`` may raise (a
+    geometry or drift check): it runs before anything is reserved."""
+    with writer_lease(path):
+        man = read_manifest(path, layout.manifest)
+        delta = rows(man)
+        seg = reserve_seg(path, layout.manifest, man)
+        _write_tables(layout, path, delta, seg, "append")
+        commit_seg(path, layout.manifest, man, seg)
+        return seg
 
-    ``key_suffix`` (r13 review): compactions that change the PHYSICAL
-    LAYOUT of the same (gen, committed) snapshot — e.g. gram_index's
-    with_first backfill — must not short-circuit to a previously
-    published plain compaction of the same snapshot (rename-if-absent
-    would silently ignore the upgrade request); the layout bit joins
-    the key so upgraded and plain asides are distinct, each
-    idempotent."""
-    from ..sources import derived
 
-    def build(tmp: str) -> None:
-        write_into(tmp)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    new_path = (
-        f"{path}._rs_g{man.get(GEN_KEY, 0)}_c{snapshot_seg(man)}{key_suffix}"
-    )
-    return derived.publish(build, new_path)
+def compact(
+    spark: SparkSession,
+    layout: Layout,
+    path: str,
+    fold: Callable[[dict, dict[str, DataFrame]], dict[str, DataFrame]]
+    | None = None,
+) -> str:
+    """Fold the live rows back into a single segment in place (see
+    compact_swap). ``fold(manifest, current rows)`` may rewrite the rows
+    and set manifest keys before they are written; the new manifest
+    bumps ``gen`` so snapshot caches re-derive. The writer lease is
+    held from the manifest read through the swap: an append landing in
+    between would otherwise be dropped by the fold."""
+    with writer_lease(path):
+        man = read_manifest(path, layout.manifest)
+        rows = _current(spark, layout, path, man, list(layout.tables))
+        if fold is not None:
+            rows = fold(man, rows)
+        new = {
+            **man,
+            MAX_SEG_KEY: 0,
+            COMMITTED_KEY: 0,
+            GEN_KEY: man.get(GEN_KEY, 0) + 1,  # ABA guard for caches
+        }
+        return compact_swap(path, lambda tmp: _write_index(layout, tmp, rows, new))
 
 
 WRITER_LOCK = "_writer.lock"

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..functions import pii
 from ..functions import text as text_fns
 from ..functions.text import BPE_SPLIT_RE, STOPWORDS, lang_id, quality_metrics
-from ..operators import dedup, fts, textops
+from ..operators import dedup, fts, segments, textops
 from ..registry import (
     _SQL_DUP_PAIRS_085,
     _SQL_STOPWORDS,
@@ -1203,7 +1203,8 @@ def gram_lifecycle_property_check(
         # span from the index manifest, not a re-stated constant: the
         # fold's coverage arithmetic must use the gram width the index
         # was built with
-        return _survivor_runs(probe, span=gram_index._manifest_read(idx)["span"])
+        man = segments.read_manifest(idx, gram_index.MANIFEST)
+        return _survivor_runs(probe, span=man["span"])
 
     tmp = tempfile.mkdtemp(prefix="gram_lifecycle_")
     try:
@@ -1238,7 +1239,8 @@ def gram_lifecycle_property_check(
             .count()
         )
         gram_index.compact_gram_index(spark, idx)
-        manifest_ok = gram_index._manifest_read(idx)["max_seg"] == 0
+        man = segments.read_manifest(idx, gram_index.MANIFEST)
+        manifest_ok = man["max_seg"] == 0
         raw_ok = same_rows(
             spark.read.parquet(f"{idx}/grams"),
             spark.read.parquet(f"{idx_fresh}/grams"),
@@ -1321,7 +1323,7 @@ def gram_backfill_property_check(
         gram_index.compact_gram_index(spark, idx, backfill_first_from=current)
         gram_index.write_gram_index(current, fresh, span=6, with_first=True)
 
-        man = gram_index._manifest_read(idx)
+        man = segments.read_manifest(idx, gram_index.MANIFEST)
         manifest_ok = man.get("with_first") is True and man["max_seg"] == 0
         raw_ok = same_rows(
             spark.read.parquet(f"{idx}/grams"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import relational
+from ..operators import relational, segments
 from ..registry import (
     _SQL_TOKENS,
     _d,
@@ -780,7 +780,8 @@ def band_lifecycle_property_check(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         pairs_seg = gate(idx, "seg")
         jobs.compact_band_index(spark, idx)
-        manifest_ok = jobs._band_manifest_read(idx)["max_seg"] == 0
+        man = segments.read_manifest(idx, jobs.BAND_MANIFEST)
+        manifest_ok = man["max_seg"] == 0
         pairs_compact = gate(idx, "compact")
         raw_ok = all(
             same_rows(

@@ -114,23 +114,7 @@ def _prune_stale_generations(final: str, ttl: float = _PRUNE_TTL_SECONDS) -> Non
     name up to the trailing _<fingerprint> segment. Best-effort only,
     and age-gated — a generation is only removed once its mtime is at
     least ``ttl`` seconds old, so queries that are still lazily listing
-    its part files finish before the directory disappears.
-
-    Publish-aside compaction dirs (``<base>._rs_g<gen>_c<seg>``, see
-    operators/segments.compact_aside) get asymmetric treatment (r12,
-    ADVICE r11):
-
-    - They are NEVER stem-pruned directly. Their suffix shifts the
-      rsplit boundary so the generic match could only ever hit a
-      SIBLING aside dir of the same base — i.e. a later aside publish
-      of the same index could TTL-prune an earlier aside dir a caller
-      adopted (and may have appended to) out from under them. Adopted
-      aside dirs are single-writer lineages the CALLER retires.
-    - They ARE pruned as a lineage when their base generation is
-      pruned: an aside dir of a superseded source fingerprint can
-      never be re-resolved (derived_path keys on the new fingerprint),
-      so it goes with its base — each dir TTL-gated individually, as a
-      freshly-compacted aside of an old tree may still have readers."""
+    its part files finish before the directory disappears."""
     import time
 
     base = os.path.basename(final)
@@ -141,49 +125,16 @@ def _prune_stale_generations(final: str, ttl: float = _PRUNE_TTL_SECONDS) -> Non
     except OSError:
         return
     now = time.time()
-
-    def _rm_if_expired(name: str) -> bool:
-        full = os.path.join(parent, name)
-        try:
-            if now - os.stat(full).st_mtime < ttl:
-                return False  # possible in-flight readers — next publish prunes
-        except OSError:
-            return False
-        shutil.rmtree(full, ignore_errors=True)
-        return True
-
     for name in siblings:
-        if name == base or ".build-" in name or "._rs_" in name:
+        if name == base or ".build-" in name:
             continue
         if name.rsplit("_", 1)[0] == stem and name.startswith(
             os.path.basename(_PREFIX)
         ):
-            if not _rm_if_expired(name):
+            full = os.path.join(parent, name)
+            try:
+                if now - os.stat(full).st_mtime < ttl:
+                    continue  # possible in-flight readers — next publish prunes
+            except OSError:
                 continue
-            # the superseded generation's publish-aside lineage
-            # (including nested ._rs_..._rs_... chains, by prefix)
-            for aside in siblings:
-                if aside.startswith(name + "._rs_"):
-                    _rm_if_expired(aside)
-    # ORPHANED aside lineages (r13, ADVICE r12): when a base generation
-    # was pruned but its aside dirs were still younger than the TTL, the
-    # block above left them — and on every later sweep the base no
-    # longer exists, so the startswith block was never reached again
-    # (an unbounded best-effort disk leak). Sweep them here: an aside
-    # whose ROOT base (the name before the first ._rs_) matches this
-    # artifact's stem pattern but is GONE from disk can never be
-    # re-resolved (derived_path keys on the live fingerprint) and goes
-    # as soon as its own TTL lapses. Asides of the LIVE base are
-    # untouched — those are adopted single-writer lineages the caller
-    # retires (the r12 contract above).
-    for name in siblings:
-        if "._rs_" not in name:
-            continue
-        root = name.split("._rs_", 1)[0]
-        if (
-            root != base
-            and root.rsplit("_", 1)[0] == stem
-            and root.startswith(os.path.basename(_PREFIX))
-            and not os.path.exists(os.path.join(parent, root))
-        ):
-            _rm_if_expired(name)
+            shutil.rmtree(full, ignore_errors=True)

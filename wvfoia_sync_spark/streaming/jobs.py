@@ -604,15 +604,15 @@ def streaming_near_dup(
     )
 
 
-_BAND_MANIFEST = "_manifest.json"
-
-
-def _band_manifest_read(path: str) -> dict:
-    return segments.read_manifest(path, _BAND_MANIFEST)
-
-
-def _band_manifest_write(path: str, man: dict) -> None:
-    segments.write_manifest(path, _BAND_MANIFEST, man)
+BAND_MANIFEST = "_manifest.json"
+# shingles has exactly one row per (train_id, seg), so the newest-segment
+# aggregate runs at doc cardinality, never on the much larger bands table
+BAND_LAYOUT = segments.Layout(
+    BAND_MANIFEST,
+    {"bands": "pbucket", "shingles": None},
+    live="shingles",
+    id_col="train_id",
+)
 
 
 def _banded_corpus(
@@ -622,13 +622,16 @@ def _banded_corpus(
     num_hashes: int,
     bands: int,
     shingle_size: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared build stage for the stored band index: (band rows, shingle
-    rows) for one corpus segment — the same shingle->signature->band
-    pipeline the batch dedup and the stream-static gate run."""
+    prune_buckets: int,
+    max_band_bucket: int | None,
+) -> dict[str, DataFrame]:
+    """Band rows and shingle rows for one corpus segment — the same
+    shingle->signature->band pipeline the batch dedup and the
+    stream-static gate run."""
     from ..operators.dedup import (
         _band_signatures,
         _sig_from_hashed_pandas,
+        drop_hot_band_buckets,
         hashed_shingles,
     )
 
@@ -637,8 +640,14 @@ def _banded_corpus(
     index = _band_signatures(
         h.select("id", sig(F.col("hs")).alias("sig")), bands
     ).select(F.col("id").alias("train_id"), "band", "bhash")
-    shingles = h.select(F.col("id").alias("train_id"), "hs")
-    return index, shingles
+    if max_band_bucket is not None:
+        index = drop_hot_band_buckets(index, max_band_bucket)
+    return {
+        "bands": index.withColumn(
+            "pbucket", F.pmod("bhash", F.lit(prune_buckets)).cast("int")
+        ),
+        "shingles": h.select(F.col("id").alias("train_id"), "hs"),
+    }
 
 
 def write_band_index(
@@ -656,12 +665,11 @@ def write_band_index(
     100 TB deployment of the streaming gate uses: band rows Hive-partitioned
     on ``pbucket = pmod(bhash, prune_buckets)`` (so a micro-batch's bucket
     set becomes a PartitionFilter on the scan), plus the corpus shingle
-    table for the exact verify, both carrying a ``seg`` segment column
-    (seg=0 for a fresh build) and a ``_manifest.json`` recording the
-    build parameters and the max segment — the fts_index segment model
-    (operators/fts_index.py), so append_band_index / compact_band_index
-    can maintain the index incrementally with newest-segment-wins
-    resolution for re-arriving doc_ids.
+    table for the exact verify, and a ``_manifest.json`` recording the
+    build parameters. The segment lifecycle (operators/segments.py) lets
+    append_band_index / compact_band_index maintain the index
+    incrementally with newest-segment-wins resolution for re-arriving
+    doc_ids. Published rename-if-absent, so ``path`` must be fresh.
 
     ``max_band_bucket`` bakes the stop-band guard INTO the stored index
     (r8, VERDICT r7 item 4): corpus band buckets above the cap are
@@ -674,32 +682,23 @@ def write_band_index(
     contract as minhash_lsh_candidates(max_band_bucket=): a true pair
     is lost only if it collides in NO surviving bucket. OFF by
     default."""
-    index, shingles = _banded_corpus(
-        corpus, id_col, text_col, num_hashes, bands, shingle_size
-    )
-    if max_band_bucket is not None:
-        from ..operators.dedup import drop_hot_band_buckets
-
-        index = drop_hot_band_buckets(index, max_band_bucket)
-    index = index.withColumn("seg", F.lit(0)).withColumn(
-        "pbucket", F.pmod("bhash", F.lit(prune_buckets)).cast("int")
-    )
-    os.makedirs(path, exist_ok=True)
-    index.write.mode("overwrite").partitionBy("pbucket").parquet(f"{path}/bands")
-    shingles.withColumn("seg", F.lit(0)).write.mode("overwrite").parquet(
-        f"{path}/shingles"
-    )
-    _band_manifest_write(
+    segments.build(
+        BAND_LAYOUT,
         path,
-        {
-            "max_seg": 0,
-            "committed_seg": 0,
-            "gen": 0,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_size": shingle_size,
-            "prune_buckets": prune_buckets,
-        },
+        lambda: _banded_corpus(
+            corpus,
+            id_col,
+            text_col,
+            num_hashes,
+            bands,
+            shingle_size,
+            prune_buckets,
+            max_band_bucket,
+        ),
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_size=shingle_size,
+        prune_buckets=prune_buckets,
     )
 
 
@@ -710,12 +709,11 @@ def append_band_index(
     text_col: str = "text",
     max_band_bucket: int | None = None,
 ) -> int:
-    """INCREMENTAL maintenance for the stored band index (the fts_index
-    segment posture write_band_index's docstring promises): a corpus
+    """INCREMENTAL maintenance for the stored band index: a corpus
     delta appends its band rows AS A NEW SEGMENT (new part files inside
-    the same ``pbucket=`` partition directories, ``seg = max_seg + 1``)
-    and its shingle rows to the verify table — work proportional to the
-    DELTA, never a rebuild. Build parameters (num_hashes / bands /
+    the same ``pbucket=`` partition directories) and its shingle rows
+    to the verify table — work proportional to the DELTA, never a
+    rebuild (segments.append). Build parameters (num_hashes / bands /
     shingle_size / prune_buckets) come from the index's own manifest, so
     a segment can never be appended with a geometry that disagrees with
     the stored rows. Returns the new segment id.
@@ -724,8 +722,7 @@ def append_band_index(
     corrupts the gate" finding): a delta may contain UPDATED versions of
     already-indexed docs — readers (load_band_index, the pruned gate,
     compact_band_index) resolve each train_id to its NEWEST segment, so
-    the stale version's band and shingle rows drop out of every join
-    exactly as fts_index's live-docs filter drops stale postings.
+    the stale version's band and shingle rows drop out of every join.
     Equivalence contract (tested, including an updated-doc delta): a
     gate run against write(base) + append(delta) returns the identical
     pair set as against write(upserted corpus).
@@ -742,86 +739,30 @@ def append_band_index(
     the residual cross-segment exposure is bounded by the delta sizes,
     and the stream-static form (streaming_near_dup(max_band_bucket=))
     re-derives its guard from the live index if ingest latency demands
-    a hard bound sooner.
-
-    Single-writer ENFORCED (r12): manifest read through commit under
-    the index's writer lease (segments.writer_lease) — a concurrent
-    appender raises ConcurrentWriterError instead of double-reserving
-    a segment off a stale max_seg."""
-    with segments.writer_lease(path):
-        man = _band_manifest_read(path)
-        seg = segments.next_seg(man)
-        index, shingles = _banded_corpus(
+    a hard bound sooner."""
+    return segments.append(
+        BAND_LAYOUT,
+        path,
+        lambda man: _banded_corpus(
             corpus_delta,
             id_col,
             text_col,
             man["num_hashes"],
             man["bands"],
             man["shingle_size"],
-        )
-        if max_band_bucket is not None:
-            from ..operators.dedup import drop_hot_band_buckets
-
-            index = drop_hot_band_buckets(index, max_band_bucket)
-        index = index.withColumn("seg", F.lit(seg)).withColumn(
-            "pbucket", F.pmod("bhash", F.lit(man["prune_buckets"])).cast("int")
-        )
-        # two-phase (segments.snapshot_seg's protocol, all four indexes):
-        # RESERVE the seg id before any data (crash never reuses it; a
-        # retry is newer and wins), write bands then shingles, then COMMIT
-        # — readers bound to the committed seg never see an in-flight or
-        # crashed append's partial segment, on any path including the
-        # single-segment fast path.
-        man["max_seg"] = seg
-        _band_manifest_write(path, man)
-        index.write.mode("append").partitionBy("pbucket").parquet(
-            f"{path}/bands"
-        )
-        shingles.withColumn("seg", F.lit(seg)).write.mode("append").parquet(
-            f"{path}/shingles"
-        )
-        man["committed_seg"] = seg
-        _band_manifest_write(path, man)
-        return seg
-
-
-def _live_train_segs(
-    spark: SparkSession, path: str, max_seg: int | None = None
-) -> DataFrame:
-    """(train_id, seg) of each doc's NEWEST segment — the live-docs
-    filter (one row per indexed doc; shingles has exactly one row per
-    (train_id, seg), so the max-seg aggregate is doc-cardinality —
-    never run it on the much larger bands table). ``max_seg`` bounds
-    the view to a manifest snapshot (segments committed by a
-    concurrent manifest-first append stay invisible)."""
-    rows = read_parquet(spark, f"{path}/shingles")
-    if max_seg is not None:
-        rows = segments.bounded(rows, max_seg)
-    return segments.live_view(rows, "train_id")
+            man["prune_buckets"],
+            max_band_bucket,
+        ),
+    )
 
 
 def load_band_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
     """(band rows, shingle rows) of the CURRENT index state: newest
-    segment wins per train_id (stale segments' rows drop out of the
-    equi-join on (train_id, seg) — the fts_index live-docs pattern).
-    Single-segment indexes (max_seg == 0 in the manifest: a fresh build
-    or just-compacted index, the common case) skip the live join
-    entirely — zero resolution overhead until an append actually
-    happens."""
-    bound = segments.snapshot_seg(_band_manifest_read(path))
-    bands = segments.bounded(read_parquet(spark, f"{path}/bands"), bound)
-    shingles = segments.bounded(
-        read_parquet(spark, f"{path}/shingles"), bound
-    )
-    if bound == 0:
-        return bands.drop("seg"), shingles.drop("seg")
-    live = _live_train_segs(spark, path, bound)
-    return (
-        segments.resolve_newest(bands, live, "train_id"),
-        segments.resolve_newest(shingles, live, "train_id"),
-    )
+    segment wins per train_id (segments.load)."""
+    current = segments.load(spark, BAND_LAYOUT, path)
+    return current["bands"], current["shingles"]
 
 
 def band_index_staleness(spark: SparkSession, path: str) -> dict:
@@ -849,102 +790,37 @@ def band_index_staleness(spark: SparkSession, path: str) -> dict:
     stale_fraction clears ~0.3 (the fts compaction bar) — stale rows
     inflate every candidate join's build side, not just the resolution
     aggregate."""
-    man = _band_manifest_read(path)
-    bound = segments.snapshot_seg(man)
-    if bound == 0:
-        return {"max_seg": man["max_seg"], "stale_fraction": 0.0}
-    bands = segments.bounded(read_parquet(spark, f"{path}/bands"), bound)
-    live = _live_train_segs(spark, path, bound)
-    return {
-        "max_seg": man["max_seg"],
-        "stale_fraction": segments.stale_fraction(bands, live, "train_id"),
-    }
+    return segments.staleness(spark, BAND_LAYOUT, path)
 
 
 def compact_band_index(
     spark: SparkSession,
     path: str,
     max_band_bucket: int | None = None,
-    reader_safe: bool = False,
 ) -> str:
     """Fold all appended segments back into a clean single-segment index
-    (the compaction pass append_band_index's recipe prescribes — the
-    band-index twin of operators/fts_index.py:compact_fts_index):
-    newest-wins live resolution materializes, stale segments' rows are
-    dropped for good, and ``max_band_bucket`` re-applies the tight
-    stop-band cap across the MERGED whole — the cross-segment
-    hot-bucket exposure the per-call append guard cannot see (a bucket
-    under the cap in every segment but over it in the union is dropped
-    here). Contract (tested): compact(write(base) + append(delta) × N)
-    is row-identical to a fresh write_band_index of the upserted union
-    with the same cap, and the pruned gate's pair set is unchanged.
-
-    Posture (r10): the shared whole-directory swap
-    (operators/segments.py compact_swap) — the compacted bands,
-    shingles, AND the max_seg=0 manifest are materialized into one
-    temp dir and published as a single rename pair, so no crash leaves
-    a manifest disagreeing with the layout or the two tables
-    disagreeing about segment numbering (the r9 per-subdir swaps had
-    both windows). Crash-safe single-writer rewrite; NOT safe for
-    concurrent readers mid-query — see compact_swap's docstring;
-    ``reader_safe=True`` (r11) publishes aside into a new
-    (gen, committed)-keyed sibling instead, leaving this dir intact
-    and RETURNING the new path (segments.compact_aside). The
-    pbucket Hive partitioning (the PartitionFilter pruning contract)
-    is rebuilt identically. Work is one scan of each table + the
-    doc-cardinality live aggregate + (guard on) the bucket
+    in place (segments.compact): newest-wins live resolution
+    materializes, stale segments' rows are dropped for good, and
+    ``max_band_bucket`` re-applies the tight stop-band cap across the
+    MERGED whole — the cross-segment hot-bucket exposure the per-call
+    append guard cannot see (a bucket under the cap in every segment
+    but over it in the union is dropped here). Contract (tested):
+    compact(write(base) + append(delta) × N) is row-identical to a fresh
+    write_band_index of the upserted union with the same cap, and the
+    pruned gate's pair set is unchanged. Work is one scan of each table
+    + the doc-cardinality live aggregate + (guard on) the bucket
     heavy-hitter aggregate — proportional to the index, run at the
     cadence band_index_staleness's trigger chooses; appends stay
-    delta-sized between runs. The in-place mode holds the writer
-    lease from manifest read to swap (r12); aside mode needs none
-    (source untouched, snapshot-keyed publish)."""
-    import contextlib
+    delta-sized between runs."""
+    from ..operators.dedup import drop_hot_band_buckets
 
-    ctx = (
-        contextlib.nullcontext() if reader_safe else segments.writer_lease(path)
-    )
-    with ctx:
-        return _compact_band_index_locked(
-            spark, path, max_band_bucket, reader_safe
-        )
+    def fold(_man: dict, rows: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        if max_band_bucket is None:
+            return rows
+        bands = drop_hot_band_buckets(rows["bands"], max_band_bucket)
+        return {**rows, "bands": bands}
 
-
-def _compact_band_index_locked(
-    spark: SparkSession,
-    path: str,
-    max_band_bucket: int | None,
-    reader_safe: bool,
-) -> str:
-    man = _band_manifest_read(path)
-    bands_live, shingles_live = load_band_index(spark, path)
-    if max_band_bucket is not None:
-        from ..operators.dedup import drop_hot_band_buckets
-
-        bands_live = drop_hot_band_buckets(bands_live, max_band_bucket)
-    bands_out = bands_live.withColumn("seg", F.lit(0)).withColumn(
-        "pbucket", F.pmod("bhash", F.lit(man["prune_buckets"])).cast("int")
-    )
-
-    def write_into(tmp: str) -> None:
-        bands_out.write.mode("overwrite").partitionBy("pbucket").parquet(
-            os.path.join(tmp, "bands")
-        )
-        shingles_live.withColumn("seg", F.lit(0)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "shingles"))
-        _band_manifest_write(
-            tmp,
-            {
-                **man,
-                "max_seg": 0,
-                "committed_seg": 0,
-                "gen": man.get("gen", 0) + 1,  # ABA guard for caches
-            },
-        )
-
-    if reader_safe:
-        return segments.compact_aside(path, man, write_into)
-    return segments.compact_swap(path, write_into)
+    return segments.compact(spark, BAND_LAYOUT, path, fold)
 
 
 def streaming_near_dup_pruned(
@@ -1013,7 +889,7 @@ def streaming_near_dup_pruned(
         hashed_shingles,
     )
 
-    man = _band_manifest_read(index_path)
+    man = segments.read_manifest(index_path, BAND_MANIFEST)
     for arg, key in (
         (num_hashes, "num_hashes"),
         (bands, "bands"),
@@ -1054,12 +930,12 @@ def streaming_near_dup_pruned(
     # rows) and can recur across a compaction (the ABA case the
     # generation component catches); mechanics shared with the gram gate
     live_cache, live_close = segments.live_snapshot_cache(
-        lambda b: _live_train_segs(spark, index_path, b)
+        lambda b: segments.live_map(spark, BAND_LAYOUT, index_path, man, b)
     )
     live_cache(segments.snapshot_key(man), segments.snapshot_seg(man))
 
     def gate(batch_df: DataFrame, epoch_id: int) -> None:
-        bman = _band_manifest_read(index_path)
+        bman = segments.read_manifest(index_path, BAND_MANIFEST)
         bound = segments.snapshot_seg(bman)
         live = live_cache(segments.snapshot_key(bman), bound)
         h_in = hashed_shingles(batch_df, "doc_id", "text", shingle_size)
@@ -1084,11 +960,11 @@ def streaming_near_dup_pruned(
         # invisible on every path, including the 0 -> 1 transition's
         # fast path (no live join), which would otherwise read the new
         # segment's half-committed rows alongside the old ones
-        idx = segments.bounded(
-            read_parquet(spark, f"{index_path}/bands"), bound
-        ).where(F.col("pbucket").isin(pb))
-        shingle_t = segments.bounded(
-            read_parquet(spark, f"{index_path}/shingles"), bound
+        idx = segments.scan(spark, BAND_LAYOUT, index_path, "bands", bound).where(
+            F.col("pbucket").isin(pb)
+        )
+        shingle_t = segments.scan(
+            spark, BAND_LAYOUT, index_path, "shingles", bound
         ).withColumnRenamed("hs", "hs_t")
         if live is not None:  # stale-segment rows drop out of the join
             idx = idx.join(live, ["train_id", "seg"])
@@ -1324,12 +1200,12 @@ def streaming_substring_gate(
     append landing mid-batch cannot be half-seen — including the
     0 -> 1 transition, where the fast path would otherwise read
     freshly-appended rows with no live join and expose both versions
-    of a re-arrived doc (the gram_index module docstring's contract).
+    of a re-arrived doc (segments.snapshot_seg's contract).
     """
     from ..operators import gram_index
     from ..operators.textops import survivor_runs
 
-    man = gram_index._manifest_read(index_path)
+    man = segments.read_manifest(index_path, gram_index.MANIFEST)
     if span is not None and span != man["span"]:
         raise ValueError(
             f"span={span} disagrees with the stored index's manifest "
@@ -1347,16 +1223,14 @@ def streaming_substring_gate(
     # compaction can make a committed number recur); mechanics shared
     # with the band gate
     live_cache, live_close = segments.live_snapshot_cache(
-        lambda b: segments.live_view(
-            gram_index._bounded(spark, index_path, "live", b), id_col
-        )
+        lambda b: segments.live_map(spark, gram_index.LAYOUT, index_path, man, b)
     )
     live_cache(segments.snapshot_key(man), segments.snapshot_seg(man))
 
     from ..functions import text as text_fns
 
     def gate(batch_df: DataFrame, epoch_id: int) -> None:
-        bman = gram_index._manifest_read(index_path)
+        bman = segments.read_manifest(index_path, gram_index.MANIFEST)
         bound = segments.snapshot_seg(bman)
         # within-batch version resolution (see docstring): one
         # deterministic row per id before any gating
@@ -1380,8 +1254,8 @@ def streaming_substring_gate(
         )
         # the only driver-side collect, bounded by prune_buckets
         gb = [r[0] for r in probe.select("gbucket").distinct().collect()]
-        stored = gram_index._bounded(
-            spark, index_path, "grams", bound
+        stored = segments.scan(
+            spark, gram_index.LAYOUT, index_path, "grams", bound
         ).where(F.col("gbucket").isin(gb))
         live = live_cache(segments.snapshot_key(bman), bound)
         if live is not None:  # stale segments drop out
@@ -1507,7 +1381,7 @@ def streaming_delta_impact(
     from ..operators import gram_index
     from ..operators.textops import delta_report_fold
 
-    man = gram_index._manifest_read(index_path)
+    man = segments.read_manifest(index_path, gram_index.MANIFEST)
     span = man["span"]
     id_col = man["id_col"]
     spark = incoming.sparkSession
