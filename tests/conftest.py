@@ -49,19 +49,39 @@ def silver_duck(silver_df, fixture_dir):
 
 
 def spark_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn launched on this thread), counted
-    in a job group."""
+    """(fn(), number of Spark jobs fn launched), counted in a job group.
+    A streaming query started inside fn runs its micro-batches on its own
+    thread under the job group of its run id, so those groups count too."""
     import uuid
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
 
     sc = spark.sparkContext
     group = uuid.uuid4().hex
+    runs = RunIds()
+    spark.streams.addListener(runs)
     sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.streams.removeListener(runs)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    return out, sum(len(tracker.getJobIdsForGroup(g)) for g in [group, *runs.ids])
 
 
 def assert_frames_equal(spark_df, duck_df, sort_cols=None):

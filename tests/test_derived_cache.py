@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from wvfoia_sync_spark.sources import derived
 
 
@@ -113,3 +115,21 @@ def test_publish_prunes_stale_generations(tmp_path, monkeypatch):
     derived._prune_stale_generations(new)
     assert not os.path.exists(old)
     assert os.path.exists(new)
+
+
+def test_publish_into_unbuilt_directory_raises(tmp_path):
+    """A ``final`` holding a stale file and no ``_SUCCESS`` is not a lost
+    race: publish must fail naming it, not return a path nothing was
+    built at."""
+    final = str(tmp_path / "artifact_stale")
+    os.makedirs(final)
+    _touch(os.path.join(final, "leftover"), b"x")
+
+    def build(tmp):
+        os.makedirs(tmp)
+        _touch(os.path.join(tmp, "_SUCCESS"), b"")
+
+    with pytest.raises(FileExistsError, match="artifact_stale"):
+        derived.publish(build, final)
+    assert os.listdir(final) == ["leftover"]
+    assert [n for n in os.listdir(tmp_path) if ".build-" in n] == []

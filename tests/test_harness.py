@@ -152,6 +152,28 @@ def test_session_turns_off_call_site_capture(spark):
     assert perr._enable_debugging_cache is False
 
 
+def test_session_codegen_cache_holds_a_repeated_query_mix(spark):
+    """get_spark's session keeps a mix of more distinct plans than
+    Spark's default codegen cache (100 classes) compiled: running the mix
+    a second time compiles nothing."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    metrics = getattr(spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$")
+    compilations = metrics.__getattr__("MODULE$").METRIC_COMPILATION_TIME()
+    base = random.randrange(1 << 40, 1 << 50)  # code no earlier test compiled
+
+    def cycle():
+        start = compilations.getCount()
+        for i in range(150):
+            spark.range(3).select(F.col("id") + F.lit(base + i)).collect()
+        return compilations.getCount() - start
+
+    assert cycle() >= 150
+    assert cycle() == 0
+
+
 def test_driver_window_fully_resolvable():
     """Every DRIVER_WINDOW name must resolve to a registered query (the
     runtime path silently skips unknowns so a rename can't zero the

@@ -166,10 +166,11 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     outw = edges.groupBy(F.col("src").alias("ow_src")).agg(
         F.sum("w").alias("tw")
     )
-    # persist the normalized edges: without it every iteration's lineage
-    # re-derives the FULL fact join (3 copies of the expensive subtree in
-    # one plan — observed), breaking the one-fact-pass promise. Edges are
-    # node^2-bounded rows; at 100 TB this is the table you'd checkpoint.
+    # checkpoint the normalized edges: without it every iteration's
+    # lineage re-derives the FULL fact join (3 copies of the expensive
+    # subtree in one plan — observed), breaking the one-fact-pass
+    # promise. Edges are node^2-bounded rows. A local checkpoint belongs
+    # to this frame alone, so no later query is served its rows.
     en = (
         edges.join(F.broadcast(outw), edges.src == F.col("ow_src"))
         .select(
@@ -177,7 +178,7 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dst",
             (F.col("w").cast("double") / F.col("tw").cast("double")).alias("wn"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     nodes = n.select(F.col("n_nationkey").cast("int").alias("node"), "n_name")
     ranks = nodes.select("node", F.lit(1.0).alias("r"))

@@ -81,6 +81,9 @@ def publish(build: Callable[[str], None], final: str) -> str:
     if ``final`` does not exist yet. A concurrent builder that loses the
     race discards its own temp dir — the shared final path is never
     rmtree'd, so no process can yank a directory a reader just resolved.
+    A ``final`` that exists without ``_SUCCESS`` (a crashed or hand-made
+    directory) is not a lost race: ``publish`` raises ``FileExistsError``
+    rather than return a path nothing was built at.
     Older fingerprint generations of the same artifact are pruned
     best-effort AFTER publication, and only once they are older than
     ``_PRUNE_TTL_SECONDS``: Spark and DuckDB list parquet part files
@@ -98,8 +101,12 @@ def publish(build: Callable[[str], None], final: str) -> str:
         build(tmp)
         try:
             os.rename(tmp, final)
-        except OSError:
-            pass  # another builder published first; outputs are equivalent
+        except OSError as e:
+            # a lost race is fine: the winner's output is equivalent
+            if not os.path.exists(os.path.join(final, "_SUCCESS")):
+                raise FileExistsError(
+                    f"cannot publish {final}: it exists and holds no _SUCCESS"
+                ) from e
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     _prune_stale_generations(final)

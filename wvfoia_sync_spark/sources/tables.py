@@ -17,7 +17,10 @@ generation and remembers the ``StructType``, keyed by the path's
 confs that change what inference returns; a later read declares that
 schema and runs no job (6-13 ms). Each call still builds a fresh relation
 with fresh attribute ids, so self-joins of two reads stay resolvable; no
-DataFrame is cached. One entry per path: a rewritten file replaces it.
+DataFrame is cached. One entry per path: a rewritten file replaces it,
+and ``spark.catalog.refreshByPath`` drops the rows of any frame persisted
+over the old files, which Spark's cache manager would otherwise hand to
+every later plan that reads the same path.
 """
 
 from __future__ import annotations
@@ -82,6 +85,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(path)
+    if hit is not None and hit[0][0] != key[0]:
+        # a new file generation: a frame some query persisted over the
+        # old files would otherwise keep answering for this path
+        spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     _SCHEMAS[path] = (key, df.schema)
     return df
